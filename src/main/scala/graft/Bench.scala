@@ -300,6 +300,11 @@ object Bench {
     val stamps = results.map { case (k, _, _, _, ts) =>
       s"\"" + k + "\":[" + ts.map(t => f"$t%.1f").mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // samples actually taken per query: `runs`, plus up to 2 extra when
+    // the spread was wide — the N of each query's min-of-N
+    val sampleCounts = results.map { case (k, _, _, _, ts) =>
+      s"\"" + k + "\":" + ts.size
+    }.mkString("{", ",", "}")
     val failedList = results.collect { case (k, _, true, _, _) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.flatMap(_._2).sum
@@ -334,7 +339,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"WARN: could not write bench detail sidecar $detailPath: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","runs":$runs,"detail":"$detailPath","failed":$failedList,"control":$control,"control_io":$controlIo,"queries":$qs,"value":$total}""")
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","runs":$runs,"samples_n":$sampleCounts,"detail":"$detailPath","failed":$failedList,"control":$control,"control_io":$controlIo,"queries":$qs,"value":$total}""")
     rmTree(warm); rmTree(ckptRoot)
     spark.stop()
   }

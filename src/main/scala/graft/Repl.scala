@@ -70,7 +70,7 @@ object Repl {
     // executeFor / executeProcedure only do for relations the passed
     // catalog does NOT already bind
     def fileCatalog(): Map[String, DataFrame] =
-      parquetTables.map { case (n, f) => n -> spark.read.parquet(f.toString) }
+      parquetTables.map { case (n, f) => n -> Tables.scan(spark, f.toString) }
     def catalog(): Map[String, DataFrame] = {
       val stored = store.toSeq.flatMap(s =>
         s.tables.map(n => n -> s.read(n))).toMap

@@ -2457,8 +2457,8 @@ object HeroQL {
         val dir = sources.getOrElse(st.rel, throw Analyzer.AnalysisError(
           s"no source bound for relation ${st.rel}"))
         val Seq(keyV, valueV, idV) = st.vars
-        val physical = spark.read.parquet(
-          s"$dir/${st.rel.toLowerCase}.parquet").schema.fieldNames.toSet
+        val physical = graft.Tables.schemaOf(spark,
+          s"$dir/${st.rel.toLowerCase}.parquet").fieldNames.toSet
         st.vars.filterNot(physical.contains) match {
           case missing if missing.nonEmpty => throw Analyzer.AnalysisError(
             s"stream aggregate variables must name physical columns of " +

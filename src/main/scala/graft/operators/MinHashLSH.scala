@@ -238,35 +238,52 @@ object MinHashLSH {
     val bc = spark.sparkContext.broadcast(
       graft.functions.VectorFns.IdHashesMap.build(
         sigs.select(col(idCol), col(hCol)).as[(Long, Array[Long])].collect()))
-    val fname = s"graft_bjac_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-    val reg = spark.sessionState.functionRegistry
-    val out = try {
-      reg.createOrReplaceTempFunction(fname,
-        exprs => graft.functions.VectorFns.BroadcastJaccardProbe(
-          exprs(0), exprs(1), bc, threshold), "built-in")
-      val df = cand.withColumn("jaccard", expr(s"$fname(a_id, b_id)"))
-        .filter(col("jaccard") >= threshold)
-        .dropDuplicates("a_id", "b_id")
-        .select("a_id", "b_id", "jaccard")
-      // the probe stage is CPU-HEAVY over BYTE-SMALL shuffles (~30 MB
-      // of 16-byte id pairs carrying ~5 CPU-seconds of intersect work
-      // at sf0.1, measured 2.6 µs/pair single-threaded by
-      // graft.tools.ProbeMicro) — AQE's partition coalescing sees only
-      // the bytes and was folding the band-join + probe stage onto 3
-      // tasks, serializing the verify (measured: the whole stage ran
-      // at ~1/10 of the cluster). Same disease the corpus repartition
-      // at the pipeline entry documents; coalescing is disabled just
-      // for this eager materialization (conf restored immediately)
-      val conf = spark.conf
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val was = conf.get(coalesceKey, "true")
-      conf.set(coalesceKey, "false")
-      try df.localCheckpoint() // EAGER — the broadcast dies right after
-      finally conf.set(coalesceKey, was)
-    } finally reg.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
-    bc.destroy()
-    out
+    try {
+      val fname = s"graft_bjac_tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+      val reg = spark.sessionState.functionRegistry
+      try {
+        reg.createOrReplaceTempFunction(fname,
+          exprs => graft.functions.VectorFns.BroadcastJaccardProbe(
+            exprs(0), exprs(1), bc, threshold), "built-in")
+        val df = cand.withColumn("jaccard", expr(s"$fname(a_id, b_id)"))
+          .filter(col("jaccard") >= threshold)
+          .dropDuplicates("a_id", "b_id")
+          .select("a_id", "b_id", "jaccard")
+        // the probe stage is CPU-HEAVY over BYTE-SMALL shuffles (~30 MB
+        // of 16-byte id pairs carrying ~5 CPU-seconds of intersect work
+        // at sf0.1, measured 2.6 µs/pair single-threaded by
+        // graft.tools.ProbeMicro) — AQE's partition coalescing sees only
+        // the bytes and was folding the band-join + probe stage onto 3
+        // tasks, serializing the verify (measured: the whole stage ran
+        // at ~1/10 of the cluster). Same disease the corpus repartition
+        // at the pipeline entry documents; coalescing is disabled just
+        // for this eager materialization, and the conf is restored
+        // exactly — unset again when it was unset
+        val conf = spark.conf
+        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+        val was =
+          if (spark.sessionState.conf.contains(coalesceKey)) Some(conf.get(coalesceKey)) else None
+        conf.set(coalesceKey, "false")
+        try {
+          val out = df.localCheckpoint() // EAGER — the broadcasts die right after
+          releaseStageBroadcasts(df)
+          out
+        } finally was.fold(conf.unset(coalesceKey))(conf.set(coalesceKey, _))
+      } finally reg.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
+    } finally bc.destroy() // a failed checkpoint must not leak it either
+  }
+
+  /** Destroy the broadcast relations AQE materialized while executing
+    * `df` (a broadcast-hash candidate join's build side). `df` was just
+    * checkpointed eagerly, so its plan never runs again; left alone,
+    * those blocks live until a GC lets the ContextCleaner reach them. */
+  private def releaseStageBroadcasts(df: DataFrame): Unit = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+    object stages extends AdaptiveSparkPlanHelper
+    stages.collect(df.queryExecution.executedPlan) {
+      case s: BroadcastQueryStageExec if s.isMaterialized => s.broadcast.relationFuture.get()
+    }.distinctBy(_.id).foreach(_.destroy())
   }
 
   /** Self-join of band keys, optionally salted ([[BandSaltConf]]): the

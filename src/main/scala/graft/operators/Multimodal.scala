@@ -71,7 +71,7 @@ object Multimodal {
     * buffer allocated once per partition). */
   def imageTable(spark: SparkSession, dir: String): Dataset[ImageRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.scan(spark, s"$dir/documents.parquet")
       .select("doc_id").as[Long]
       .mapPartitions { ids =>
         // codec init once per partition: shared output buffer, no
@@ -187,7 +187,7 @@ object Multimodal {
     * container is simple enough that the encoder is the spec. */
   def audioTable(spark: SparkSession, dir: String): Dataset[AudioRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.scan(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % 3 === 1)
       .select("doc_id").as[Long]
       .mapPartitions { ids =>
@@ -296,7 +296,7 @@ object Multimodal {
     * frame EXTRACTION below exercises genuine positioned decode. */
   def videoTable(spark: SparkSession, dir: String): Dataset[VideoRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.scan(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % 3 === 2)
       .select("doc_id").as[Long]
       .mapPartitions { ids =>
@@ -381,7 +381,7 @@ object Multimodal {
     * [[decodeImages]]. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.scan(spark, s"$dir/documents.parquet")
       .select(col("doc_id").as("media_id"),
         struct(
           when(col("doc_id") % 3 === 0, "image")

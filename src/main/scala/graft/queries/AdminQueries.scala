@@ -101,7 +101,7 @@ object AdminQueries extends QueryPack {
     st.exportRing("orders", ring, slots = 2) // slot 1: v1+v2
     st.insert("orders", part(2))
     st.exportRing("orders", ring, slots = 2) // wraps: slot 0 rewritten, v1+v2+v3
-    s.read.parquet(s"$ring/slot-0")
+    graft.Tables.scan(s, s"$ring/slot-0")
   }
 
   /** adm5 — time travel: three commits (create, update, delete), then

@@ -58,7 +58,7 @@ object SourceQueries extends QueryPack {
     t(s, d, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
-    s.read.parquet(dir)
+    graft.Tables.scan(s, dir)
       .filter(col("o_orderstatus") === "F")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_f_orders"), round(sum("o_totalprice"), 2).as("spend"))

@@ -270,7 +270,7 @@ object Streaming extends QueryPack {
 
   /** The events corpus's state fan — one parquet metadata count. */
   private def eventsFan(s: SparkSession, d: String): Int =
-    EventStreams.stateFan(s, s.read.parquet(s"$d/events.parquet").count())
+    EventStreams.stateFan(s, graft.Tables.scan(s, s"$d/events.parquet").count())
 
   private def st8(s: SparkSession, d: String): DataFrame = {
     drainToParquet(s, EventStreams.streamStreamSignupJoin(s, d), "st8",

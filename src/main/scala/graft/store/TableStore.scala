@@ -221,12 +221,19 @@ final class TableStore(val spark: SparkSession, val root: String) {
     * column pushes through the union into every scan, so bucket
     * pruning holds per dir. `decorate` runs directly above each raw
     * scan (NOT above the union: `_metadata` columns only resolve
-    * against a file source relation). */
+    * against a file source relation).
+    *
+    * Both reads go through [[graft.Tables.scan]], whose schema cache
+    * keys on the dir Spark's inference reads — the smallest
+    * `data-<uuid>` dir of an unpartitioned run, the head dir of a
+    * partitioned one — plus that dir's file listing. A committed dir
+    * is immutable, so a table read again after commits that leave its
+    * smallest dir in place infers nothing: no Spark job. */
   private[store] def readDirs(table: String, dirs: Seq[String],
       partitioned: Boolean = false,
       decorate: DataFrame => DataFrame = identity): DataFrame =
     if (!partitioned)
-      decorate(spark.read.parquet(dirs.map(d => resolveDir(table, d).toString): _*))
+      decorate(graft.Tables.scan(spark, dirs.map(d => resolveDir(table, d).toString): _*))
     else {
       val paths = dirs.map(d => resolveDir(table, d))
       val nonEmpty = paths.filter(hasParquetCached)
@@ -235,7 +242,7 @@ final class TableStore(val spark: SparkSession, val root: String) {
       // shares a schema vintage, and per-leg inference would re-read
       // footers once per dir per plan build (a streaming probe builds
       // plans every micro-batch)
-      val head = spark.read.parquet(use.head.toString)
+      val head = graft.Tables.scan(spark, use.head.toString)
       val rest = use.tail.map(p =>
         spark.read.schema(head.schema).parquet(p.toString))
       (head +: rest).map(decorate).reduce(_.unionByName(_))

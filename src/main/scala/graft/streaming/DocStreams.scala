@@ -55,7 +55,7 @@ object DocStreams {
   private def stageOrderedDocs(spark: SparkSession, dir: String, nFiles: Int,
       idCol: String = "doc_id", sourceTable: String = "documents"): String = {
     val stage = Files.createTempDirectory("graft-docstream-")
-    val docs = spark.read.parquet(s"$dir/$sourceTable.parquet")
+    val docs = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
     // cast before the collect: an int32-regenerated id column must not
     // ClassCastException the staging (schema-drift hardening)
     val maxId = docs.agg(max(col(idCol).cast("long"))).head.getLong(0)
@@ -101,7 +101,7 @@ object DocStreams {
     * null-keyed dedup. Same guard on [[dedupSinkToStoreByFp]]. */
   def dedupSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/documents.parquet")
     val staged = stageOrderedDocs(spark, dir, nFiles = 4)
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)
@@ -193,7 +193,7 @@ object DocStreams {
       idCol: String = "doc_id", textCol: String = "text",
       carryCols: Seq[String] = Seq("lang", "n_chars"),
       sourceTable: String = "documents"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$sourceTable.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
     val staged = stageOrderedDocs(spark, dir, nFiles = 4, idCol, sourceTable)
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(staged)

@@ -144,10 +144,11 @@ object EventStreams {
     * batch and cost one state-heavy micro-batch per drain). With
     * no-data batches DISABLED there is no trailing batch, so the
     * second, later round is restored — without it the first round's
-    * watermark would never apply and tail state would never flush. */
+    * watermark would never apply and tail state would never flush.
+    * The conf is read through Spark's typed getter, so it parses the
+    * way the engine that runs the drain does (`TRUE` is true). */
   private def heartbeatRounds(spark: SparkSession): Seq[Long] =
-    if (spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled",
-        "true") == "true") Seq(30L)
+    if (spark.sessionState.conf.streamingNoDataMicroBatchesEnabled) Seq(30L)
     else Seq(30L, 31L)
 
   /** Append one future-dated copy of [[maxTsBase]]'s row as its own
@@ -203,7 +204,7 @@ object EventStreams {
   def runningUserTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // id-range chunks, one per trigger: the state genuinely
     // accumulates across micro-batches instead of one giant batch
     val src = spark.readStream.schema(schema)
@@ -234,10 +235,10 @@ object EventStreams {
       store: graft.store.TableStore, table: String, vars: Seq[String],
       dimPath: String, dimVars: Seq[String], leftKey: String,
       rightKey: String, sourceTable: String = "events"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$sourceTable.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
     require(vars.forall(schema.fieldNames.contains),
       s"stream enrich variables must name physical columns of $sourceTable")
-    val dim = spark.read.parquet(dimPath)
+    val dim = graft.Tables.scan(spark, dimPath)
     require(dimVars.forall(dim.schema.fieldNames.contains),
       s"stream enrich dimension variables must name physical columns of $dimPath")
     val src = spark.readStream.schema(schema)
@@ -271,10 +272,10 @@ object EventStreams {
     * against a static side needs no watermark, and append mode emits
     * each enriched row exactly once). */
   def streamStaticSegmentJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val src = tsInstant(spark.readStream.schema(schema).parquet(stageDir(spark, dir)._1))
     val dim = org.apache.spark.sql.functions.broadcast(
-      spark.read.parquet(s"$dir/customer.parquet")
+      graft.Tables.scan(spark, s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment")))
     src.join(dim, col("user_id") === col("c_custkey"))
       .select(col("c_mktsegment"), col("event_id"), col("value"))
@@ -289,7 +290,7 @@ object EventStreams {
     * an exact oracle, while still exercising eviction across the
     * four id-chunked micro-batches. */
   def watermarkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val src = tsInstant(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events")))
@@ -338,7 +339,7 @@ object EventStreams {
         (stage.toString, 1)
       } else {
         stageCorpusParallel(spark,
-          spark.read.parquet(src.toString), stage.toString)
+          graft.Tables.scan(spark, src.toString), stage.toString)
       }
     }
   }
@@ -452,7 +453,7 @@ object EventStreams {
       store: graft.store.TableStore, table: String, gapSeconds: Long,
       vars: Seq[String], sourceTable: String = "events"): DataFrame = {
     val Seq(userV, tsV, valueV, idV) = vars
-    val schema = spark.read.parquet(s"$dir/$sourceTable.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
     require(Seq(userV, tsV, valueV, idV).forall(schema.fieldNames.contains),
       s"stream sessionize variables must name physical columns of $sourceTable")
     val gapNanos = gapSeconds * 1000000000L
@@ -584,7 +585,7 @@ object EventStreams {
       nFiles: Int, chunkCol: String, sourceTable: String,
       orderByTs: Boolean = false): String = {
     val stage = java.nio.file.Files.createTempDirectory("graft-evstream-")
-    val rows0 = spark.read.parquet(s"$dir/$sourceTable.parquet")
+    val rows0 = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
     val rows =
       if (orderByTs) {
         import org.apache.spark.sql.expressions.Window
@@ -631,7 +632,7 @@ object EventStreams {
       store: graft.store.TableStore, table: String,
       spec: graft.store.MaterializedView.MvSpec,
       sourceTable: String = "events", chunkCol: String = "event_id"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$sourceTable.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stageEventChunks(spark, dir, nFiles = 4, chunkCol, sourceTable))
@@ -658,7 +659,7 @@ object EventStreams {
     * the watermark passes — bounded state at any stream length, the
     * non-negotiable for a join that runs forever. */
   def streamStreamSignupJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val (staged, _) = stageDir(spark, dir)
     def src() = tsInstant(spark.readStream.schema(schema).parquet(staged))
     val signups = src().filter(col("event_type") === "signup")
@@ -708,7 +709,7 @@ object EventStreams {
 
   private def streamStreamSignupOuterJoin(spark: SparkSession, dir: String,
       joinType: String, timeSlices: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // ONE-BATCH corpus staging (unlike [[stageDir]]'s verbatim
     // part-file copy): the drain below runs `maxFilesPerTrigger = 1`,
     // so every staged file is one micro-batch — and each of this
@@ -846,7 +847,7 @@ object EventStreams {
     * aggregation. */
   def streamWindowedKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     val k = 256
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val (staged, corpusFiles) = stageDir(spark, dir)
     val (maxMicros, hbBase) = maxTsBase(spark, staged, schema)
     heartbeatRounds(spark).foreach(writeHeartbeat(hbBase, staged, _))
@@ -888,7 +889,7 @@ object EventStreams {
     * heartbeat machinery identical to st19's. */
   def streamWindowedTupleSum(spark: SparkSession, dir: String): DataFrame = {
     val k = 256
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val (staged, corpusFiles) = stageDir(spark, dir)
     val (maxMicros, hbBase) = maxTsBase(spark, staged, schema)
     heartbeatRounds(spark).foreach(writeHeartbeat(hbBase, staged, _))
@@ -922,7 +923,7 @@ object EventStreams {
     * table. */
   def sinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // id-range chunked staging → one commit per micro-batch: the sink
     // gate exercises REAL multi-batch ingest, not one giant batch
     val src = spark.readStream.schema(schema)
@@ -958,7 +959,7 @@ object EventStreams {
     * tombstone debt bounded across any number of triggers. */
   def retentionSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String, retain: Long): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
@@ -991,7 +992,7 @@ object EventStreams {
     * from the bad batch commits). */
   def checkedSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
@@ -1016,7 +1017,7 @@ object EventStreams {
     * result columns back to NTZ before comparing with batch. */
   def streamed(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame, watermark: String = "1 hour"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val src = tsInstant(spark.readStream.schema(schema).parquet(stageDir(spark, dir)._1))
     transform(src.withWatermark("ts", watermark))
   }

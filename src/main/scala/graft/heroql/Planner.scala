@@ -1808,10 +1808,7 @@ object Planner {
     * B=4 3.2s (the deeper plan's Catalyst cost eats the scheduling
     * savings past 3). Mutable so specs can pin 1 (the classic
     * one-step semi-naïve) and assert result parity. */
-  private[graft] var fixpointBatchRounds: Int =
-    // clamped ≥1: a zero/negative batch would run the inner step loop
-    // zero times and crash the round's `reduce` on an empty builder
-    math.max(1, sys.env.get("GRAFT_FIXPOINT_BATCH").map(_.toInt).getOrElse(3))
+  private[graft] var fixpointBatchRounds: Int = 3
 
   /** Round cap for the rule fixpoint — a diagnostic backstop against
     * value-generating recursion (x <- y + 1 derives a fresh tuple every

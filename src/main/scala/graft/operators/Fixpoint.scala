@@ -43,8 +43,7 @@ object Fixpoint {
     // stage every round — Janino time, not data time. Interpreted
     // execution of the small per-round frames is strictly cheaper
     // (measured: hq21 per-step job 0.45s → see SURVEY §12 round-12).
-    conf.set("spark.sql.codegen.wholeStage",
-      sys.env.getOrElse("GRAFT_FIXPOINT_CODEGEN", "false"))
+    conf.set("spark.sql.codegen.wholeStage", "false")
     // default fan suits SMALL per-round state (recursive-rule deltas);
     // a loop whose rounds shuffle the whole input (CC over an edge
     // corpus) passes the full parallelism instead — 8 tasks sorting

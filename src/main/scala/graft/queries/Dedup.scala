@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
-import graft.operators.{GraphOps, MinHashLSH, TextFns}
+import graft.operators.{GraphOps, HashFamily, MinHashLSH, TextFns}
 
 /** Deduplication operators over the `documents` / `embeddings` tables
   * (training-data pipeline scope; graded alongside SURVEY §2).
@@ -95,15 +95,15 @@ object Dedup extends QueryPack {
   }
 
   /** dd3 — MinHash + banded LSH near-dup pairs (21 bands × 3 rows,
-    * exact-Jaccard verified ≥ 0.25) on the md5-derived hash family
+    * exact-Jaccard verified ≥ 0.25) on [[HashFamily.Md5]]
     * ([[MinHashLSH.md5Hash31Sql]]): DuckDB computes the identical base
     * hashes, so the WHOLE pipeline — signature, banding, candidate
-    * collision, verification — has a full SQL oracle (the LSH algebra
-    * under test is production's; only the base hash family differs).
-    * The xxhash64 production path stays the default for callers and is
-    * what the bench times ([[dd3Production]], Bench.prodOverrides). */
+    * collision, verification — has a full SQL oracle. It is the same
+    * engine as production; only the hash family differs. The
+    * [[HashFamily.XxHash]] run of it is what the bench times
+    * ([[dd3Production]], Bench.prodOverrides). */
   private def dd3(s: SparkSession, d: String): DataFrame =
-    MinHashLSH.nearDuplicatesMd5(
+    MinHashLSH.nearDuplicates(HashFamily.Md5,
       t(s, d, "documents").select("doc_id", "text"), "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25)
 
@@ -111,7 +111,7 @@ object Dedup extends QueryPack {
     * single-pass shingle hashing + size-gated map-verify, the 100 TB
     * shape). Not a driver gate: xxhash64 ∉ DuckDB. */
   private[graft] def dd3Production(s: SparkSession, d: String): DataFrame =
-    MinHashLSH.nearDuplicates(
+    MinHashLSH.nearDuplicates(HashFamily.XxHash,
       t(s, d, "documents").select("doc_id", "text"), "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25)
 
@@ -119,7 +119,7 @@ object Dedup extends QueryPack {
     * k-component estimator), md5 family → full oracle; DedupSpec also
     * bounds the estimator error against exact Jaccard. */
   private def dd3b(s: SparkSession, d: String): DataFrame =
-    MinHashLSH.nearDuplicatesEstimatedMd5(
+    MinHashLSH.nearDuplicatesEstimated(HashFamily.Md5,
       t(s, d, "documents").select("doc_id", "text"), "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25)
 
@@ -226,7 +226,7 @@ object Dedup extends QueryPack {
     * which fp-collapses the corpus to representatives first. */
   private def dd6b(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select("doc_id", "text")
-    MinHashLSH.nearDuplicatesAgainstMd5(
+    MinHashLSH.nearDuplicatesAgainst(HashFamily.Md5,
       docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
       "doc_id", "text", shingleLen = 5, bands = 21, rowsPerBand = 3,
       threshold = 0.25)
@@ -308,7 +308,7 @@ object Dedup extends QueryPack {
     def repText(side: DataFrame, reps: DataFrame): DataFrame =
       side.join(reps.select(col("rep_id")), side("doc_id") === col("rep_id"))
         .select(col("doc_id"), col("text"))
-    val pairs = MinHashLSH.nearDuplicatesAgainstMd5(
+    val pairs = MinHashLSH.nearDuplicatesAgainst(HashFamily.Md5,
       repText(corpus, cReps), repText(batch, bReps),
       "doc_id", "text", shingleLen = 5, bands = 21, rowsPerBand = 3,
       threshold = threshold)
@@ -452,7 +452,7 @@ object Dedup extends QueryPack {
     * partial aggregate. Duplication-invariant where dd12 is quadratic
     * in the duplication factor. */
   private def dd14(s: SparkSession, d: String): DataFrame = {
-    val pairs = MinHashLSH.nearDuplicatesMd5(
+    val pairs = MinHashLSH.nearDuplicates(HashFamily.Md5,
       t(s, d, "documents").select("doc_id", "text"), "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25)
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -495,7 +495,7 @@ object Dedup extends QueryPack {
     // output is materialized storage (it IS the exact-dedup result)
     val reps = docs.groupBy("text").agg(min(col("doc_id")).as("rep_id"))
       .localCheckpoint()
-    val pairs = MinHashLSH.nearDuplicatesMd5(
+    val pairs = MinHashLSH.nearDuplicates(HashFamily.Md5,
       reps.select(col("rep_id").as("doc_id"), col("text")), "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25)
     val cc = GraphOps.connectedComponentsDF(s,
@@ -536,7 +536,7 @@ object Dedup extends QueryPack {
     * alone expected ~0.5, the r17 ADVICE finding). Both lanes are
     * still non-cryptographic, so a determined adversary with engine
     * knowledge could construct a double collision; corpora with
-    * actively hostile authors ⇒ use md5 (dd3's nearDuplicatesMd5
+    * actively hostile authors ⇒ use md5 (dd3's [[HashFamily.Md5]]
     * already carries that plumbing). Every layered consumer
     * (dd6c/dd7/dd12/dd14c) keys through [[fpKey]]/this function, so
     * the stance is one place wide. */
@@ -603,7 +603,7 @@ object Dedup extends QueryPack {
     val repDocs = docs.join(reps.select(col("rep_id")),
         docs("doc_id") === col("rep_id"))
       .select(col("doc_id"), col("text"))
-    val pairs = MinHashLSH.nearDuplicatesMd5(repDocs, "doc_id", "text",
+    val pairs = MinHashLSH.nearDuplicates(HashFamily.Md5, repDocs, "doc_id", "text",
       shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = threshold)
     val cc = GraphOps.connectedComponentsDF(s,
       pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
@@ -1116,8 +1116,8 @@ object Dedup extends QueryPack {
     "list_distinct([substr(text, x, 5) for x in range(1, greatest(length(text) - 4, 0) + 1)])"
 
   /** Shared DuckDB CTE prefix of the md5-family LSH oracles — the exact
-    * mirror of [[MinHashLSH.nearDuplicatesMd5]]'s phases with the SAME
-    * seeded coefficients interpolated as literals: base hashes from
+    * mirror of the [[MinHashLSH]] phases on [[HashFamily.Md5]], with the
+    * SAME seeded coefficients interpolated as literals: base hashes from
     * md5 (bit-identical in both engines), per-doc minhash signature,
     * stringified 3-row band keys. 63 = 21 bands × 3 rows; 2147483659 =
     * the affine-map prime; 2147483648 = the 31-bit fold. `src` is the

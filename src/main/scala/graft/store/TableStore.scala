@@ -457,9 +457,12 @@ final class TableStore(val spark: SparkSession, val root: String) {
     * their retry policy. */
   private def mutate[T](f: Txn => T): T = transactionRetry(f)
 
-  /** Serializes validate+publish for this store's writers (the designed
-    * "apply single-threaded" stage; one driver JVM owns a store root). */
-  private val commitLock = new Object
+  /** Serializes validate+publish for this root's writers (the designed
+    * "apply single-threaded" stage; one driver JVM owns a store root).
+    * Shared by every instance on the same root: a per-instance lock let
+    * two instances each read `_CURRENT` and overwrite the other's
+    * commit. */
+  private val commitLock = TableStore.commitLockFor(root)
 
   /** Transactions currently between open and publish/abort. [[vacuum]]
     * treats their snapshot AND buffered manifests as reachability roots:
@@ -1910,6 +1913,14 @@ final class Txn(store: TableStore, private[store] val importance: Int = 0,
 }
 
 object TableStore {
+  private val commitLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The JVM-wide commit lock of a store root, keyed by its normalized
+    * absolute path so every spelling of one root shares it. */
+  private def commitLockFor(root: String): Object = commitLocks.computeIfAbsent(
+    Paths.get(root).toAbsolutePath.normalize.toString, _ => new Object)
+
   /** Session override for [[TableStore.vacuum]]'s age threshold: files
     * younger than this are never reclaimed, protecting in-flight writes
     * the sweeping JVM can't observe (another driver's open txn). */

@@ -53,7 +53,7 @@ object Dd14Prof {
           .select(col("doc_id"), col("text")).localCheckpoint()
         println(s"  reps: ${r.count()}"); r
       }
-      // --- inside nearDuplicatesMd5 (replicated stage by stage) ---
+      // --- inside nearDuplicates(HashFamily.Md5, ...) (replicated stage by stage) ---
       val (cas, cbs) = MinHashLSH.coeffs(63)
       graft.functions.VectorFns.register(spark, cas, cbs)
       val par = spark.sparkContext.defaultParallelism

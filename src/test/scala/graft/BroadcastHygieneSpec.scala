@@ -26,9 +26,9 @@ class BroadcastHygieneSpec extends SparkSpec {
   test("repeated md5 near-dup executions do not accumulate verify broadcasts") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def run(): Long = graft.operators.MinHashLSH.nearDuplicatesMd5(
-      docs, "doc_id", "text", shingleLen = 5, bands = 21,
-      rowsPerBand = 3, threshold = 0.25).count()
+    def run(): Long = graft.operators.MinHashLSH.nearDuplicates(
+      graft.operators.HashFamily.Md5, docs, "doc_id", "text",
+      shingleLen = 5, bands = 21, rowsPerBand = 3, threshold = 0.25).count()
     val r1 = run()
     // the per-doc hash arrays at sf0.001 make the probe broadcast
     // ~100s of KB; task binaries stay well under this threshold

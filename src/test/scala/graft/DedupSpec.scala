@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{MinHashLSH, TextFns}
+import graft.operators.{HashFamily, MinHashLSH, TextFns}
 import graft.queries.{Dedup, Similarity}
 
 class DedupSpec extends SparkSpec {
@@ -57,7 +57,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.t(spark, sf, "documents").limit(60)
       .select(concat(lit("doc-"), col("doc_id")).as("doc_id"), col("text"))
-    val pairs = MinHashLSH.nearDuplicates(docs, "doc_id", "text", 5, 16, 4, 0.25)
+    val pairs = MinHashLSH.nearDuplicates(HashFamily.XxHash, docs, "doc_id", "text", 5, 16, 4, 0.25)
     assert(!pairs.queryExecution.sparkPlan.toString.contains("MapPartitions"),
       "string ids must not take the Long-keyed map path")
     val got = pairs.select("a_id", "b_id").collect()
@@ -93,7 +93,7 @@ class DedupSpec extends SparkSpec {
       concat(col("text"), lit(s" variant$i")).as("text")))
       .reduce(_ union _)
     val docs = reps.select(col("doc_id"), TextFns.shingles("text", 5).as("sh"))
-    val pairs = MinHashLSH.nearDuplicates(reps, "doc_id", "text",
+    val pairs = MinHashLSH.nearDuplicates(HashFamily.XxHash, reps, "doc_id", "text",
       shingleLen = 5, bands = 9, rowsPerBand = 7, threshold = 0.7)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
     val repDocs = corpus.join(reps.select(col("rep_id")),
         corpus("doc_id") === col("rep_id"))
       .select(col("doc_id"), col("text"))
-    val pairs = MinHashLSH.nearDuplicatesAgainst(repDocs, batch,
+    val pairs = MinHashLSH.nearDuplicatesAgainst(HashFamily.XxHash, repDocs, batch,
         "doc_id", "text", shingleLen = 5, bands = 9, rowsPerBand = 7,
         threshold = 0.7)
     val fanned = reps.join(pairs, reps("rep_id") === pairs("corpus_id"))
@@ -217,7 +217,7 @@ class DedupSpec extends SparkSpec {
     val batch = base.select((col("doc_id") + 100000).as("doc_id"),
       concat(col("text"), lit(" v2")).as("text"))
     val ids = base.select("doc_id").as[Long].collect()
-    def run() = MinHashLSH.nearDuplicatesAgainst(base, batch, "doc_id", "text",
+    def run() = MinHashLSH.nearDuplicatesAgainst(HashFamily.XxHash, base, batch, "doc_id", "text",
       shingleLen = 5, bands = 9, rowsPerBand = 7, threshold = 0.7)
       .select("corpus_id", "new_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -242,7 +242,7 @@ class DedupSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaBroadcast = MinHashLSH.nearDuplicates(docs, "doc_id", "text", 5, 16, 4, 0.25)
+    val viaBroadcast = MinHashLSH.nearDuplicates(HashFamily.XxHash, docs, "doc_id", "text", 5, 16, 4, 0.25)
     // r21: the gated verify is the codegen'd broadcast-probe expression,
     // EAGERLY materialized (so its broadcast can be destroyed) — the
     // returned frame is a checkpoint scan with no join machinery left
@@ -257,7 +257,7 @@ class DedupSpec extends SparkSpec {
     spark.conf.set(graft.operators.SizeGate.MaxRowsConf, "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val viaShuffle = MinHashLSH.nearDuplicates(docs, "doc_id", "text", 5, 16, 4, 0.25)
+      val viaShuffle = MinHashLSH.nearDuplicates(HashFamily.XxHash, docs, "doc_id", "text", 5, 16, 4, 0.25)
       assert(!viaShuffle.queryExecution.sparkPlan.toString.contains("Broadcast"),
         "gate failed to suppress the verify broadcast")
       assert(pairs(viaShuffle) == expected,
@@ -719,5 +719,36 @@ class DedupSpec extends SparkSpec {
     if (partDirs > 16)
       assert(read < onDisk,
         s"index probe must open a strict subset: read $read of $onDisk ($partDirs partitions)")
+  }
+
+  test("shingle-less documents never pair, on every entry point and both hash families") {
+    import spark.implicits._
+    // texts shorter than the 5-char shingle: no shingles, an
+    // all-sentinel signature, and an undefined (NaN) Jaccard
+    val short = Seq((9001L, "ab"), (9002L, "xy"), (9003L, ""), (9004L, "abcd"))
+      .toDF("doc_id", "text")
+    val shortIds = short.select("doc_id").as[Long].collect().toSet
+    val base = Tables.t(spark, sf, "documents").limit(30).select("doc_id", "text")
+    val docs = base.unionByName(short)
+    // two short docs on each side of the incremental form
+    val corpus = base.filter(col("doc_id") % 2 === 0)
+      .unionByName(short.filter(col("doc_id") <= 9002L))
+    val batch = base.filter(col("doc_id") % 2 =!= 0)
+      .unionByName(short.filter(col("doc_id") > 9002L))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    Seq(HashFamily.XxHash, HashFamily.Md5).foreach { family =>
+      val outputs = Seq(
+        "nearDuplicates" -> MinHashLSH.nearDuplicates(family, docs, "doc_id", "text",
+          5, 21, 3, 0.25).select("a_id", "b_id"),
+        "nearDuplicatesEstimated" -> MinHashLSH.nearDuplicatesEstimated(family, docs,
+          "doc_id", "text", 5, 21, 3, 0.25).select("a_id", "b_id"),
+        "nearDuplicatesAgainst" -> MinHashLSH.nearDuplicatesAgainst(family, corpus, batch,
+          "doc_id", "text", 5, 21, 3, 0.25).select("corpus_id", "new_id"))
+      outputs.foreach { case (name, df) =>
+        val paired = ids(df).intersect(shortIds)
+        assert(paired.isEmpty, s"$name ($family) paired shingle-less docs $paired")
+      }
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.MinHashLSH
+import graft.operators.{HashFamily, MinHashLSH}
 
 /** The skew escape hatch for dd3's banded candidate self-join
   * (`spark.graft.dedup.bandSaltBuckets`): a viral near-dup cluster —
@@ -24,29 +24,32 @@ class SaltedBandJoinSpec extends SparkSpec {
     hot.unionByName(cold)
   }
 
-  private def pairs() = MinHashLSH.nearDuplicates(
-    corpus, "doc_id", "text",
+  private def pairs(family: HashFamily) = MinHashLSH.nearDuplicates(
+    family, corpus, "doc_id", "text",
     shingleLen = 5, bands = 7, rowsPerBand = 3, threshold = 0.5)
     .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def estPairs() = MinHashLSH.nearDuplicatesEstimated(
-    corpus, "doc_id", "text",
+  private def estPairs(family: HashFamily) = MinHashLSH.nearDuplicatesEstimated(
+    family, corpus, "doc_id", "text",
     shingleLen = 5, bands = 7, rowsPerBand = 3, threshold = 0.5)
     .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("salted band join yields byte-identical pairs on a 40x hot signature") {
-    val plain = pairs()
-    val plainEst = estPairs()
-    // every replica pair must be found regardless of path
-    assert(plain.size >= 40 * 39 / 2, s"expected all replica pairs, got ${plain.size}")
-    spark.conf.set(MinHashLSH.BandSaltConf, "8")
-    try {
-      assert(pairs() == plain,
-        "salted candidate generation diverges from the unsalted result")
-      // the estimator variant routes through the same salted join
-      assert(estPairs() == plainEst,
-        "salted estimator-verify candidates diverge from the unsalted result")
-    } finally spark.conf.unset(MinHashLSH.BandSaltConf)
+    // the salted join serves both hash families
+    Seq(HashFamily.XxHash, HashFamily.Md5).foreach { family =>
+      val plain = pairs(family)
+      val plainEst = estPairs(family)
+      // every replica pair must be found regardless of path
+      assert(plain.size >= 40 * 39 / 2, s"$family: expected all replica pairs, got ${plain.size}")
+      spark.conf.set(MinHashLSH.BandSaltConf, "8")
+      try {
+        assert(pairs(family) == plain,
+          s"$family: salted candidate generation diverges from the unsalted result")
+        // the estimator variant routes through the same salted join
+        assert(estPairs(family) == plainEst,
+          s"$family: salted estimator-verify candidates diverge from the unsalted result")
+      } finally spark.conf.unset(MinHashLSH.BandSaltConf)
+    }
   }
 
   test("the salt reaches the join key and is off by default") {
@@ -56,7 +59,7 @@ class SaltedBandJoinSpec extends SparkSpec {
     // salted self-join is the same code either way
     spark.conf.set(graft.operators.SizeGate.MaxRowsConf, "0")
     def plan(): String = MinHashLSH.nearDuplicates(
-      corpus, "doc_id", "text", 5, 7, 3, 0.5)
+      HashFamily.XxHash, corpus, "doc_id", "text", 5, 7, 3, 0.5)
       .queryExecution.executedPlan.toString
     assert(!plan().contains("__salt"), "band join salted without the conf")
     spark.conf.set(MinHashLSH.BandSaltConf, "8")

@@ -184,6 +184,25 @@ class StoreSpec extends SparkSpec {
     assert(st.read("b").count() == 4, "concurrent disjoint commit merged, not clobbered")
   }
 
+  test("two instances on one root: concurrent disjoint creates all survive") {
+    val root = Files.createTempDirectory("graft-store-spec-").toString
+    val stores = Seq(new TableStore(spark, root), new TableStore(spark, root))
+    val names = for (i <- 0 until 8; j <- 0 until 3) yield s"t_${i}_$j"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // 8 threads, alternating between the instances, 3 tables each
+      (0 until 8).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = names.filter(_.startsWith(s"t_${i}_"))
+            .foreach(stores(i % 2).create(_, seedDf))
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
+    val fresh = new TableStore(spark, root)
+    assert(fresh.tables.toSet == names.toSet,
+      s"commits lost: ${names.toSet -- fresh.tables}")
+  }
+
   test("optimistic CC: transactionRetry re-runs the conflicting txn to success") {
     import spark.implicits._
     val st = freshStore()

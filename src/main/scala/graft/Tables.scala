@@ -124,10 +124,9 @@ object Tables {
         val hp = new Path(p)
         hp.getFileSystem(hadoopConf).makeQualified(hp)
       }.minBy(_.toString + "/")
-      val leaves = listLeaves(root.getFileSystem(hadoopConf), root)
-      if (!leaves.exists(_.getLen > 0)) None
-      else Some(Key(root.toString,
-        leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
+      val leaves = listing(root.getFileSystem(hadoopConf), root)
+      if (!leaves.exists(_._2 > 0)) None
+      else Some(Key(root.toString, leaves,
         Seq(conf.isParquetBinaryAsString, conf.isParquetINT96AsTimestamp,
           conf.parquetInferTimestampNTZEnabled, conf.legacyParquetNanosAsLong,
           conf.caseSensitiveAnalysis),
@@ -135,14 +134,15 @@ object Tables {
     }.toOption.flatten
   }
 
-  /** Every visible leaf file under `p` (or `p` itself if it is a file),
-    * sorted by path. */
-  private def listLeaves(fs: FileSystem, p: Path): Vector[FileStatus] = {
+  /** Every visible leaf file under `p` (or `p` itself if it is a file) as
+    * (path, length, mtime), sorted by path. */
+  private[graft] def listing(fs: FileSystem, p: Path): Vector[(String, Long, Long)] = {
     def walk(st: FileStatus): Vector[FileStatus] =
       if (!st.isDirectory) Vector(st)
       else fs.listStatus(st.getPath).toVector
         .filterNot(s => hidden(s.getPath.getName)).flatMap(walk)
-    walk(fs.getFileStatus(p)).sortBy(_.getPath.toString)
+    walk(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
   }
 
   private def fileRelation(df: DataFrame): Option[HadoopFsRelation] =

@@ -1,6 +1,6 @@
 package graft.heroql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,24 @@ import Ast._
   * variables ascending (name order), so rank-filtered results are stable
   * and oracle-checkable.
   */
-final class Planner(decls: Map[String, DataDecl],
-    queryDecls: Map[String, QueryDecl], catalog: Map[String, DataFrame],
+final class Planner(spark: SparkSession, decls: Map[String, DataDecl],
+    queryDecls: Map[String, QueryDecl], catalog: Catalog,
     funcs: Map[String, FuncDecl] = Map.empty,
     unions: Map[String, UnionDecl] = Map.empty) {
+
+  /** Catalog bindings forced so far: each relation the query reaches is
+    * built once per compile, and one it never reaches is never built. */
+  private val bound = scala.collection.mutable.Map.empty[String, DataFrame]
+
+  private def relation(name: String): Option[DataFrame] =
+    bound.get(name).orElse(catalog.bindings.get(name).map { build =>
+      val df = build()
+      bound(name) = df
+      df
+    })
+
+  private def boundRelation(name: String): DataFrame = relation(name).getOrElse(
+    throw Analyzer.AnalysisError(s"no table bound for relation $name"))
 
   /** variant name -> (tag, owning union) across all declared unions. */
   private val variantInfo: Map[String, (Int, UnionDecl)] =
@@ -304,8 +318,6 @@ final class Planner(decls: Map[String, DataDecl],
       case None => return None
       case Some(rs) => rs
     }
-    val spark = catalog.headOption.map(_._2.sparkSession).getOrElse(
-      org.apache.spark.sql.SparkSession.active)
     def castTo(cCol: Column, i: Int): Column =
       if (types(i).isEmpty) cCol.as(head(i))
       else cCol.cast(sparkType(types(i))).as(head(i))
@@ -391,8 +403,6 @@ final class Planner(decls: Map[String, DataDecl],
       throw Analyzer.AnalysisError(
         s"recursive query ${q.name}: already calculating (mutual recursion is not supported; self-recursive rules evaluate via the fixpoint)")
     planning += q.name
-    val spark = catalog.headOption.map(_._2.sparkSession).getOrElse(
-      org.apache.spark.sql.SparkSession.active)
     // a NESTED fixpoint (a recursive alternative referencing another
     // self-recursive query) must not clobber the outer loop's EDB
     // materializations — save/restore, like recursionBinding
@@ -444,7 +454,7 @@ final class Planner(decls: Map[String, DataDecl],
       recAlts.foreach(checkStratified(_, inSelfScope = true, Set(q.name)))
       edbCache = edbCacheWas ++ dataRels(Body(recAlts), Set(q.name))
         .filterNot(edbCacheWas.contains)
-        .flatMap(r => catalog.get(r).collect {
+        .flatMap(r => relation(r).collect {
           case df if df.queryExecution.optimizedPlan.stats.sizeInBytes
               <= Planner.edbCacheMaxBytes => r -> df.localCheckpoint()
         }).toMap
@@ -735,8 +745,7 @@ final class Planner(decls: Map[String, DataDecl],
         s"range_agg needs a body of exactly (id, ${st.probeVar}); got $cols")
       val decl = decls.getOrElse(st.rel,
         throw Analyzer.AnalysisError(s"range_agg over unknown relation ${st.rel}"))
-      val bdf = catalog.getOrElse(st.rel,
-        throw Analyzer.AnalysisError(s"no table bound for relation ${st.rel}"))
+      val bdf = boundRelation(st.rel)
       def physical(v: String): Column = {
         val i = decl.fields.indexWhere(_._1 == v)
         if (i < 0) throw Analyzer.AnalysisError(
@@ -836,8 +845,7 @@ final class Planner(decls: Map[String, DataDecl],
         case Some((rel, f1, f2)) =>
           val decl = decls.getOrElse(rel, throw Analyzer.AnalysisError(
             s"semantic_dedup against unknown relation $rel"))
-          val bdf = catalog.getOrElse(rel, throw Analyzer.AnalysisError(
-            s"no table bound for relation $rel"))
+          val bdf = boundRelation(rel)
           def physical(v: String): Column = {
             val i = decl.fields.indexWhere(_._1 == v)
             if (i < 0) throw Analyzer.AnalysisError(
@@ -894,8 +902,7 @@ final class Planner(decls: Map[String, DataDecl],
         case Some((rel, f1, f2)) =>
           val decl = decls.getOrElse(rel, throw Analyzer.AnalysisError(
             s"near_dedup against unknown relation $rel"))
-          val bdf = catalog.getOrElse(rel, throw Analyzer.AnalysisError(
-            s"no table bound for relation $rel"))
+          val bdf = boundRelation(rel)
           def physical(v: String): Column = {
             val i = decl.fields.indexWhere(_._1 == v)
             if (i < 0) throw Analyzer.AnalysisError(
@@ -949,8 +956,7 @@ final class Planner(decls: Map[String, DataDecl],
         case Some((rel, f1, f2)) =>
           val decl = decls.getOrElse(rel, throw Analyzer.AnalysisError(
             s"nearest for unknown relation $rel"))
-          val bdf = catalog.getOrElse(rel, throw Analyzer.AnalysisError(
-            s"no table bound for relation $rel"))
+          val bdf = boundRelation(rel)
           def physical(v: String): Column = {
             val i = decl.fields.indexWhere(_._1 == v)
             if (i < 0) throw Analyzer.AnalysisError(
@@ -1668,7 +1674,7 @@ final class Planner(decls: Map[String, DataDecl],
   private def atomDf(a: Atom): DataFrame = {
     val (fields, base) = decls.get(a.rel) match {
       case Some(d) =>
-        (d.fields.map(_._1), edbCache.getOrElse(a.rel, catalog.getOrElse(a.rel,
+        (d.fields.map(_._1), edbCache.getOrElse(a.rel, relation(a.rel).getOrElse(
           throw Analyzer.AnalysisError(s"relation ${a.rel} not bound in catalog"))))
       case None =>
         val q = queryDecls.getOrElse(a.rel,
@@ -1859,18 +1865,50 @@ object Planner {
 /** Facade: parse + analyze + plan one named query of a HeroQL program
   * against a catalog of table bindings. */
 object HeroQL {
+  /** [[compile]] over frames that are already built (never plan-cached). */
   def compile(program: String, queryName: String,
-      catalog: Map[String, DataFrame]): DataFrame = {
-    val ast = Parser.parse(program)
-    val decls = ast.datas.map(d => d.name -> d).toMap
-    val queryDecls = ast.queries.map(q => q.name -> q).toMap
-    val funcs = ast.funcs.map(f => f.name -> f).toMap
-    val unions = ast.unions.map(u => u.name -> u).toMap
-    val q = ast.queries.find(_.name == queryName)
-      .getOrElse(throw Analyzer.AnalysisError(s"no query named $queryName"))
-    Analyzer.analyze(decls, queryDecls, q, funcs)
-    new Planner(decls, queryDecls, catalog, funcs, unions).plan(q)
-  }
+      catalog: Map[String, DataFrame]): DataFrame =
+    compile(sessionOf(catalog), program, queryName, Catalog.of(catalog))
+
+  /** Parse, analyze and plan query `queryName` of `program`, forcing only
+    * the catalog bindings the query reaches.
+    *
+    * A catalog with an id compiles once per (program, query, catalog,
+    * input snapshot), not once per call. The analyzed plan is cached
+    * under:
+    *  - the session, held weakly and compared by identity;
+    *  - the program text and the query name;
+    *  - the catalog id;
+    *  - every SQL conf the session has set.
+    * A hit re-lists the root paths of each file scan in the plan and
+    * compares them with that scan's file index (path, length, mtime);
+    * any difference is a miss. A hit returns a new DataFrame over a copy
+    * of the analyzed plan: optimization, physical planning and execution
+    * run afresh on every call. It is a plan cache, not a result cache.
+    *
+    * Never cached: a compile that launched a Spark job (recursive rules
+    * and magic sets, whose leaves are checkpointed RDDs; `nearest` and
+    * the other eager stages; recursive funcs whose memo is collected into
+    * literals), and a plan with any leaf other than a file scan, `Range`
+    * or `OneRowRelation` (streaming sources, in-memory rows). The cache
+    * is a bounded LRU; [[PlanCache]] counts its hits and misses. */
+  def compile(spark: SparkSession, program: String, queryName: String,
+      catalog: Catalog): DataFrame =
+    PlanCache(spark, program, s"query $queryName", catalog) {
+      val ast = Parser.parse(program)
+      val decls = ast.datas.map(d => d.name -> d).toMap
+      val queryDecls = ast.queries.map(q => q.name -> q).toMap
+      val funcs = ast.funcs.map(f => f.name -> f).toMap
+      val unions = ast.unions.map(u => u.name -> u).toMap
+      val q = ast.queries.find(_.name == queryName)
+        .getOrElse(throw Analyzer.AnalysisError(s"no query named $queryName"))
+      Analyzer.analyze(decls, queryDecls, q, funcs)
+      new Planner(spark, decls, queryDecls, catalog, funcs, unions).plan(q)
+    }
+
+  /** The session of a catalog's frames, else the active one. */
+  private def sessionOf(frames: Map[String, DataFrame]): SparkSession =
+    frames.values.headOption.map(_.sparkSession).getOrElse(SparkSession.active)
 
   /** Compile with cached-query support (`cached query Name ...` —
     * `Kernel/README.md:142-161`): a query declared `cached` serves from
@@ -1916,15 +1954,22 @@ object HeroQL {
   /** Compile a standalone `collection_query ... ;` against the data
     * declarations of `program` and a catalog of table bindings. */
   def compileCollection(program: String, cqSrc: String,
-      catalog: Map[String, DataFrame]): DataFrame = {
-    val ast = Parser.parse(program)
-    val decls = ast.datas.map(d => d.name -> d).toMap
-    val queryDecls = ast.queries.map(q => q.name -> q).toMap
-    val funcs = ast.funcs.map(f => f.name -> f).toMap
-    val cq = Parser.parseCollection(cqSrc)
-    Analyzer.analyzeConj(decls, queryDecls, cq.body, Set.empty, funcs)
-    new Planner(decls, queryDecls, catalog, funcs).planCollection(cq)
-  }
+      catalog: Map[String, DataFrame]): DataFrame =
+    compileCollection(sessionOf(catalog), program, cqSrc, Catalog.of(catalog))
+
+  /** [[compileCollection]] over a lazy catalog, plan-cached under the
+    * collection-query text as [[compile]] caches under the query name. */
+  def compileCollection(spark: SparkSession, program: String, cqSrc: String,
+      catalog: Catalog): DataFrame =
+    PlanCache(spark, program, s"collection $cqSrc", catalog) {
+      val ast = Parser.parse(program)
+      val decls = ast.datas.map(d => d.name -> d).toMap
+      val queryDecls = ast.queries.map(q => q.name -> q).toMap
+      val funcs = ast.funcs.map(f => f.name -> f).toMap
+      val cq = Parser.parseCollection(cqSrc)
+      Analyzer.analyzeConj(decls, queryDecls, cq.body, Set.empty, funcs)
+      new Planner(spark, decls, queryDecls, catalog, funcs).planCollection(cq)
+    }
 
   /** Execute a mutation query (`@insert` / `@update` / `@remove`,
     * `Kernel/README.md:210-234`) against a [[graft.store.TableStore]]
@@ -1994,7 +2039,7 @@ object HeroQL {
           case (TConst(l), f) => litOf(l).cast(fieldType(f)).as(f)
           // computed argument (`set Bonus(student, score + 1000)`)
           case (TExpr(e), f) =>
-            new Planner(decls, Map.empty, Map.empty)
+            new Planner(args.sparkSession, decls, Map.empty, Catalog.of(Map.empty))
               .exprColPublic(e).cast(fieldType(f)).as(f)
           case (t, f) => throw Analyzer.AnalysisError(s"bad @insert term $t for $f")
         }
@@ -2187,9 +2232,9 @@ object HeroQL {
     // yielded/conflicted attempt reruns against a fresh snapshot
     store.transactionRetry(importance = td.importance, f = { tx =>
       val storeTables = decls.keys.filter(t => !catalog.contains(t) && store.exists(t))
-        .map(t => t -> tx.read(t)).toMap
-      val planner = new Planner(decls, queryDecls, catalog ++ storeTables, funcs,
-        ast.unions.map(u => u.name -> u).toMap)
+        .map(t => t -> (() => tx.read(t))).toMap
+      val planner = new Planner(store.spark, decls, queryDecls,
+        Catalog.of(catalog) ++ storeTables, funcs, ast.unions.map(u => u.name -> u).toMap)
       val (prefix, rest) = td.items.span(!_.isInstanceOf[Mutation])
       val bindings =
         if (prefix.isEmpty) store.spark.range(1).toDF("__unit")
@@ -2220,9 +2265,9 @@ object HeroQL {
       fq.body.alts.foreach(Analyzer.analyzeConj(decls, queryDecls, _, Set.empty, funcs))
       store.transaction { tx =>
         val storeTables = decls.keys.filter(t => !catalog.contains(t) && store.exists(t))
-          .map(t => t -> tx.read(t)).toMap
-        val planner = new Planner(decls, queryDecls, catalog ++ storeTables, funcs,
-          ast.unions.map(u => u.name -> u).toMap)
+          .map(t => t -> (() => tx.read(t))).toMap
+        val planner = new Planner(store.spark, decls, queryDecls,
+          Catalog.of(catalog) ++ storeTables, funcs, ast.unions.map(u => u.name -> u).toMap)
         val rows = fq.body.alts.map(c => planner.planItems(c.items)
           .select(fq.vars.map(col): _*)).reduce(_ union _)
         fq.actions.foreach(applyMutation(tx, decls, _, rows, uniques))
@@ -2272,9 +2317,9 @@ object HeroQL {
         // statement N-1's buffered writes, not the txn-open snapshot
         val storeTables = decls.keys
           .filter(t => !catalog.contains(t) && tx.exists(t))
-          .map(t => t -> tx.read(t)).toMap
-        val planner = new Planner(decls, queryDecls, catalog ++ storeTables,
-          funcs, ast.unions.map(u => u.name -> u).toMap)
+          .map(t => t -> (() => tx.read(t))).toMap
+        val planner = new Planner(store.spark, decls, queryDecls,
+          Catalog.of(catalog) ++ storeTables, funcs, ast.unions.map(u => u.name -> u).toMap)
         val (prefix, rest) = items.span(!_.isInstanceOf[Mutation])
         val bindings =
           if (prefix.isEmpty) store.spark.range(1).toDF("__unit")
@@ -2390,8 +2435,8 @@ object HeroQL {
     val q = ast.queries.find(_.name == queryName).getOrElse(
       throw Analyzer.AnalysisError(s"no query named $queryName"))
     Analyzer.analyze(decls, queryDecls, q, funcs)
-    new Planner(decls, queryDecls, catalog ++ extra.toMap, funcs, unions)
-      .plan(q)
+    new Planner(pm.store.spark, decls, queryDecls, Catalog.of(catalog ++ extra),
+      funcs, unions).plan(q)
   }
 
   /** Compile a query of a defined package against one of its instances,

@@ -320,7 +320,8 @@ object MinHashLSH {
     * than the cluster has cores (the small-input case, where the
     * CPU-heavy hash scans would serialize onto a handful of cores and
     * the shuffle is byte-cheap by the same token) is spread by an
-    * explicit repartition, which then executes once per scan. At 10⁹
+    * explicit repartition, hashed once and checkpointed, so both scans
+    * read its signatures instead of hashing it twice. At 10⁹
     * corpus docs the gates flip the joins to co-located shuffles, the
     * only shape that survives there. Returns (corpus_id, new_id,
     * jaccard ≥ threshold); corpus and batch id spaces must be disjoint. */
@@ -331,17 +332,21 @@ object MinHashLSH {
     def hashed(df: DataFrame) =
       hashedOf(family, df, idCol, textCol, shingleLen, bands * rowsPerBand)
     // the batch is materialized ONCE (its bands and shingle sets both
-    // reuse it); the corpus is recomputed per scan instead — at corpus
-    // scale a checkpoint is exactly the materialization you can't afford
+    // reuse it); a corpus at cluster parallelism is recomputed per scan
+    // instead — at corpus scale a checkpoint is exactly the
+    // materialization you can't afford
     val batchHashed = hashed(batchIn).localCheckpoint()
     val batchRows = batchHashed.count()
     // spread ONLY an under-split corpus (see doc contract above): the
     // partition probe is plan-time driver work, no job runs; a corpus
     // already at cluster parallelism passes through with zero Exchange
+    // and is hashed per scan. The spread corpus is small by that same
+    // test, so its hashes are materialized once for both scans.
     val par = sess.sparkContext.defaultParallelism
-    val corpus =
-      if (corpusIn.rdd.getNumPartitions < par) corpusIn.repartition(par)
-      else corpusIn
+    val corpusHashed =
+      if (corpusIn.rdd.getNumPartitions < par)
+        hashed(corpusIn.repartition(par)).localCheckpoint()
+      else hashed(corpusIn)
     // scan 1: corpus band keys × broadcast batch band keys → candidates
     // (collision-bounded, batch-scale — checkpointed so scan 2 gets a
     // measured count to gate on instead of a guess). PRE-verify
@@ -350,7 +355,7 @@ object MinHashLSH {
     // bands (an exact re-ingest in all 21) and the verify join would
     // copy both fat hash arrays once per collision — the 100× probe
     // spilled the disk exactly here. The distinct shuffles 16-byte pairs.
-    val cand = bandedOf(family, hashed(corpus), idCol, "corpus_id", bands, rowsPerBand)
+    val cand = bandedOf(family, corpusHashed, idCol, "corpus_id", bands, rowsPerBand)
       .join(SizeGate.maybeBroadcast(
         bandedOf(family, batchHashed, idCol, "new_id", bands, rowsPerBand),
         batchRows * bands, 5000000L), Seq("band", "sig"))
@@ -359,7 +364,7 @@ object MinHashLSH {
     val candRows = cand.count()
     // scan 2: exact verification — candidates broadcast INTO the corpus
     // side (never the reverse), batch shingle sets broadcast
-    val sa = hashed(corpus).select(col(idCol).as("corpus_id"), col("h").as("sa"))
+    val sa = corpusHashed.select(col(idCol).as("corpus_id"), col("h").as("sa"))
     val sb = batchHashed.select(col(idCol).as("new_id"), col("h").as("sb"))
     sa.join(SizeGate.maybeBroadcast(cand, candRows, 5000000L), "corpus_id")
       .join(SizeGate.maybeBroadcast(sb, batchRows, 250000L), "new_id")

@@ -510,6 +510,7 @@ object Similarity extends QueryPack {
         store.createPartitioned(tbl, ivfPqIndexRows(e, cents, coarse),
           Seq("list"), Map("codebook_fp" -> fp, "corpus_fp" -> corpusFp))
     }
+    retainRecentIndexes(store, table, tbl)
     // localCheckpoint: the probe plan (scan + LUT + coarse top-NL) is
     // consumed twice — the probed-list collect and the ADC join; it is
     // ≤ |probes|×NL tiny rows, so pin it instead of recomputing
@@ -530,6 +531,39 @@ object Similarity extends QueryPack {
     * see the staleness-key note there. */
   private val annBuildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Index tables kept per (store root, logical table): two, so two
+    * corpora used in turn each keep reusing their own index. */
+  private val AnnIndexesKept = 2
+
+  /** Per (store root, logical table), its index tables, most recently
+    * used first. */
+  private val annIndexUse = scala.collection.mutable.Map.empty[String, List[String]]
+
+  /** Record that index table `used` of logical `table` was just used, and
+    * drop every other `<table>_<fp>` table of the store beyond the
+    * [[AnnIndexesKept]] most recently used, with its build lock: without
+    * this, each new corpus leaves one index table and one lock behind
+    * for the life of the store and the JVM. A table no use was recorded
+    * for (an earlier process's) counts as least recently used. */
+  private def retainRecentIndexes(store: graft.store.TableStore, table: String,
+      used: String): Unit = {
+    val kept = annIndexUse.synchronized {
+      val group = s"${store.root}#$table"
+      val order = used :: annIndexUse.getOrElse(group, Nil).filterNot(_ == used)
+      annIndexUse(group) = order.take(AnnIndexesKept)
+      annIndexUse(group).toSet
+    }
+    val ofTable = (table + "_[0-9a-f]+").r
+    store.tables.filter(t => ofTable.matches(t) && !kept(t)).foreach { t =>
+      store.drop(t)
+      annBuildLocks.remove(s"${store.root}#$t")
+    }
+  }
+
+  /** Build-lock keys held, for specs. */
+  private[graft] def annBuildLockCount(root: String): Int =
+    annBuildLocks.keySet.toArray.count(_.toString.startsWith(root + "#"))
 
   private def ann6(s: SparkSession, d: String): DataFrame = {
     val store = new graft.store.TableStore(s,

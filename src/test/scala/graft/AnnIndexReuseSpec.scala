@@ -89,6 +89,24 @@ class AnnIndexReuseSpec extends SparkSpec {
       "alternating corpora must reuse both indexes, not rebuild")
   }
 
+  test("three corpora in turn leave at most two index tables and two build locks") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val corpora = Seq(
+      e,
+      e.filter(col("vec_id") % 2 === 0),
+      e.filter(col("vec_id") % 3 =!= 0)
+        .select(col("vec_id"), expr("transform(embedding, x -> x * 2.0F)").as("embedding")))
+    corpora.foreach(nearestQuery(_).collect())
+    val kept = annManifests()
+    val root = graft.heroql.Planner.annIndexStore(spark).root
+    assert(kept.size <= 2, s"index tables kept: ${kept.keySet}")
+    assert(graft.queries.Similarity.annBuildLockCount(root) <= 2)
+    // the two most recently used are the ones kept: both still reuse
+    corpora.tail.foreach(nearestQuery(_).collect())
+    assert(annManifests() === kept)
+  }
+
   test("a sample-INVISIBLE corpus change still rebuilds (full-corpus staleness key)") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))

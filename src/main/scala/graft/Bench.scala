@@ -61,7 +61,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // pinned checkpoint root (r18 verdict item 1b): every streaming
     // drain that doesn't pass its own checkpointLocation lands under
     // THIS run's tmp root (conf root + queryName) instead of a
@@ -69,15 +68,8 @@ object Bench {
     // the same filesystem for every sample
     val ckptRoot = java.nio.file.Files
       .createTempDirectory("graft-bench-ckpt-").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.checkpointLocation", ckptRoot)
-      .getOrCreate()
+    val spark = Sessions.getOrCreate(Sessions.cpus())
+    spark.conf.set("spark.sql.streaming.checkpointLocation", ckptRoot)
     spark.sparkContext.setLogLevel("WARN")
     // per-micro-batch instrumentation: progress events attribute to the
     // query being timed when they fire (queries run sequentially, so a
@@ -149,18 +141,7 @@ object Bench {
     // itself skew later control_io idle-band readings on a tmpfs —
     // delete each sample's dirs after its timing, and the run's pinned
     // roots before spark.stop()
-    def rmTree(p: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(root)) {
-        // close the walk stream (r20 ADVICE): each un-closed Files.walk
-        // leaks a directory fd — same hazard TableStore.listDir documents
-        val s = java.nio.file.Files.walk(root)
-        try s.iterator().asScala.toSeq
-          .reverseIterator.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally s.close()
-      }
-    }
+    import Tables.rmTree
     currentQuery = "__control_io"
     val controlIo = (1 to 3).map { _ =>
       val dir = java.nio.file.Files

@@ -11,7 +11,7 @@ import graft.operators.MinHashLSH
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or, in code: a session builder's .withExtensions(new GraftExtensions)
   * }}}
   *
   * injects every graft native expression into each session built from
@@ -33,12 +33,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // transparent MV rewrite against the warehouse named by
     // spark.graft.store.root (a no-op until the conf key is set) —
     // the one-conf-key cluster deployment of graft.plans.MvRewrite
-    ext.injectOptimizerRule(new graft.plans.ConfiguredMvRewrite(_))
+    ext.injectOptimizerRule(graft.plans.MvRewrite.configured)
     // transparent Bloom/zone-map data skipping on the plain read path
     // (same conf key): Filter-over-store-scan prunes to stamp-kept dirs
-    ext.injectOptimizerRule(new graft.plans.ConfiguredAutoSkip(_))
-    ext.injectOptimizerRule(new graft.plans.ConfiguredJvRewrite(_))
-    ext.injectOptimizerRule(new graft.plans.ConfiguredFkJoinElim(_))
-    ext.injectOptimizerRule(new graft.plans.ConfiguredDistinctElim(_))
+    ext.injectOptimizerRule(graft.plans.AutoSkip.configured)
+    ext.injectOptimizerRule(graft.plans.JvRewrite.configured)
+    ext.injectOptimizerRule(graft.plans.FkJoinElim.configured)
+    ext.injectOptimizerRule(graft.plans.DistinctElim.configured)
   }
 }

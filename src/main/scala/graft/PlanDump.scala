@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `explain("formatted")` for the headline queries to a markdown
@@ -10,25 +9,23 @@ import org.apache.spark.sql.execution.ExplainMode
   * is a plan property: pushdown, broadcast, partial aggregation,
   * WindowGroupLimit, salted exchanges).
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outFile>
+  * Usage: runMain graft.PlanDump <sfDir> <outFile> [query...]
+  *
+  * Query names after `<outFile>` dump only those queries (a before/after
+  * plan for one optimization) instead of the headline set.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val only = args.drop(2).toSeq
+    val spark = Sessions.getOrCreate(Sessions.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append("# Physical plans (explain formatted), headline queries\n\n")
+    sb.append("# Physical plans (explain formatted), " +
+      (if (only.isEmpty) "headline queries" else only.mkString(", ")) + "\n\n")
     sb.append(s"Generated from `$sfDir` — regenerate with " +
-      "`sbt \"runMain graft.PlanDump <sfDir> PLANS.md\"`.\n")
+      s"`sbt \"runMain graft.PlanDump <sfDir> ${(out +: only).mkString(" ")}\"`.\n")
     // headline + the batch-plan-reviewable round-12 additions (the
     // streaming gates' plans live behind a drained memory sink — not
     // meaningful to dump here)
@@ -92,7 +89,7 @@ object PlanDump {
       "adm27_ts_double_zonemap", "hq37_incremental_semantic_hql",
       "hq38_incremental_neardedup_hql", "hq39_nearest_for_hql",
       "hq40_hash_split_hql")
-    (Bench.headline ++ extras).foreach { name =>
+    (if (only.nonEmpty) only else Bench.headline ++ extras).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       sb.append(s"\n## $name\n\n```\n$plan```\n")

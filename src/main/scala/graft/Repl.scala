@@ -59,10 +59,14 @@ object Repl {
     val parquetTables: Map[String, Path] = {
       val p = Paths.get(dataDir)
       if (!Files.isDirectory(p)) Map.empty
-      else Files.list(p).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(f => f.getFileName.toString.stripSuffix(".parquet") -> f)
-        .toMap
+      else {
+        val s = Files.list(p)
+        try s.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(f => f.getFileName.toString.stripSuffix(".parquet") -> f)
+          .toMap
+        finally s.close()
+      }
     }
     // mutating statements get ONLY the file tables: the store's tables
     // must resolve through the transaction view (read-your-writes
@@ -241,12 +245,7 @@ object Repl {
                 // dir; the harness read_parquets every produced dir, so
                 // a partial one would abort the WHOLE oracle pass —
                 // remove it (and keep the gate out of oracle_sql.json)
-                val dir = Paths.get(s"$outDir/$n")
-                if (Files.exists(dir)) {
-                  import scala.jdk.CollectionConverters._
-                  Files.walk(dir).iterator().asScala.toSeq.reverse
-                    .foreach(Files.deleteIfExists(_))
-                }
+                Tables.rmTree(s"$outDir/$n")
               }
             }
             val withOracle = produced.toSeq
@@ -312,15 +311,8 @@ object Repl {
       System.err.println("usage: graft.Repl <dataDir> [storeDir]")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-repl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // SPARK_GRAFT_MASTER points the shell at a cluster instead of local cores
+    val spark = Sessions.getOrCreate(Sessions.cpus(), sys.env.get("SPARK_GRAFT_MASTER"))
     spark.sparkContext.setLogLevel("ERROR")
     println(s"graft REPL — data: ${args(0)}" +
       args.lift(1).map(s => s", store: $s").getOrElse("") + "  (:help for commands)")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -96,6 +98,19 @@ object Tables {
 
   /** Drop every cached schema (tests compare a hit with a fresh inference). */
   private[graft] def clearSchemaCache(): Unit = cache.clear()
+
+  /** Delete the local directory tree at `p`, if any. The walk stream is
+    * closed: an unclosed `Files.walk` leaks one directory handle per
+    * call (the hazard `TableStore.listDir` documents). */
+  def rmTree(p: String): Unit = {
+    val root = java.nio.file.Paths.get(p)
+    if (java.nio.file.Files.exists(root)) {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.toSeq
+        .reverseIterator.foreach(java.nio.file.Files.deleteIfExists(_))
+      finally s.close()
+    }
+  }
 
   // options that change which files Spark lists; the key mirrors the
   // default listing only

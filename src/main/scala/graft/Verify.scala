@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,25 +21,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these query names (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.getOrCreate(Sessions.cpus())
     spark.sparkContext.setLogLevel("WARN")
     // wipe stale per-query dumps: a failing query must NOT leave a
     // previous run's parquet in place to be compared as if current
-    val outRoot = new java.io.File(outDir)
-    if (outRoot.exists()) {
-      Files.walk(outRoot.toPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
-    outRoot.mkdirs()
+    Tables.rmTree(outDir)
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

@@ -496,7 +496,6 @@ final class Planner(spark: SparkSession, decls: Map[String, DataDecl],
           finally recursionBinding -= q.name
         }.reduce(_ union _))
       while (!done && iter < maxIter) {
-        val t0 = System.nanoTime()
         // batch fixpointBatchRounds logical steps into ONE materialized
         // round: profiling (round 12) pinned the per-round cost to the
         // except+checkpoint JOB itself (~0.55s at sf0.1 — scheduling +
@@ -522,20 +521,12 @@ final class Planner(spark: SparkSession, decls: Map[String, DataDecl],
           stepIn = d
           b += 1
         }
-        val t1 = System.nanoTime()
         val fresh = outs.result().reduce(_ union _).except(acc).localCheckpoint()
-        val t2 = System.nanoTime()
         if (fresh.take(1).isEmpty) done = true
         else {
           deltas ::= fresh
           delta = fresh
         }
-        val t3 = System.nanoTime()
-        if (Planner.fixpointTraceEnabled)
-          // format: round, driver plan-build ms, except+checkpoint job
-          // ms, convergence-probe ms — the three candidate costs behind
-          // the measured ~0.35s/round constant (SURVEY §9)
-          println(f"fixpoint-trace ${q.name} round=$iter steps=$b plan=${(t1 - t0) / 1e6}%.0fms job=${(t2 - t1) / 1e6}%.0fms probe=${(t3 - t2) / 1e6}%.0fms")
         iter += b
       }
       if (Planner.fixpointStatsEnabled)
@@ -1797,12 +1788,6 @@ object Planner {
     * extra jobs for a spec-only counter. */
   private[graft] var fixpointStatsEnabled: Boolean = false
   private[graft] var lastFixpointAccRows: Long = -1L
-
-  /** Per-round phase timing to stdout (plan-build / job / probe) for
-    * profiling the fixpoint's fixed per-round overhead. Env-gated so
-    * production runs pay nothing. */
-  private[graft] val fixpointTraceEnabled: Boolean =
-    sys.env.contains("GRAFT_FIXPOINT_TRACE")
 
   /** Logical derivation steps chained lazily per materialized fixpoint
     * round. Profiling showed the per-round except+checkpoint job is the

@@ -53,8 +53,8 @@ object GraphOps {
     * Pregel on every graph shape), converges in O(log n) rounds, all
     * in Tungsten.
     *
-    * MEASURED REGIME NOTE (the r12 writeup; numbers from
-    * [[graft.tools.CCScaleProbe]] at local[32]): this form wins on
+    * MEASURED REGIME NOTE (the r12 writeup, SURVEY.md round 12; numbers
+    * from a local[32] scale probe): this form wins on
     * ONE-SHOT, MODEST pair graphs — dd7's duplicate clusters dropped
     * 17.4s → ~11-13s cold because Pregel's vertex/edge build constant
     * is gone — but LOSES to GraphX on large graphs (2M edges: 18.5s
@@ -152,11 +152,7 @@ object GraphOps {
         .select(col("dst").as("src"), col("m").as("dst"))
         .unionByName(ssMin.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
-      val t0 = System.nanoTime()
       val (next, nfp) = ckptWithFp(ss)
-      if (spark.conf.getOption("spark.graft.cc.debug").contains("true"))
-        println(f"[cc] round $iter%d n=${nfp._1}%d " +
-          f"ckpt+fp=${(System.nanoTime() - t0) / 1e9}%.2f")
       if (nfp == fp) done = true
       e = next; fp = nfp
       iter += 1

@@ -181,13 +181,14 @@ object MinHashLSH {
     * binary searches + the bounded merge-scan intersect per candidate)
     * over the band join's output stage — no join machinery, no Dataset
     * encoder boundary (a broadcast-hash-join + intersect form measured
-    * 2× SLOWER on an idle box: Dd14Prof map-verify 2.7 s, bhj-verify
-    * 5.4 s). The column is built straight from the expression; nothing
-    * is registered in the session.
+    * 2× SLOWER on an idle box: map-verify 2.59–3.04 s, bhj-verify
+    * 5.35–5.97 s, this probe 2.31–2.51 s — OPTIMIZATION_r21.md §2a). The
+    * column is built straight from the expression; nothing is
+    * registered in the session.
     *
     * The probe stage is CPU-HEAVY over BYTE-SMALL shuffles (~30 MB of
     * 16-byte id pairs carrying ~5 CPU-seconds of intersect work at
-    * sf0.1, 2.6 µs/pair single-threaded by graft.tools.ProbeMicro): AQE
+    * sf0.1, 2.6 µs/pair single-threaded, measured in r21): AQE
     * partition coalescing, seeing only the bytes, folded it onto 3 tasks
     * at ~1/10 of the cluster. `cand` therefore comes with its band join's
     * parallelism pinned (see [[saltedBandSelfJoin]]).

@@ -46,7 +46,7 @@ import graft.store.{AutoSkipProbe, TableStore}
   *
   * Install per session via [[AutoSkip.install]] (specs, embedded) or
   * cluster-wide through [[graft.GraftExtensions]] +
-  * `spark.graft.store.root` ([[ConfiguredAutoSkip]]). Kill switch:
+  * `spark.graft.store.root` ([[StoreRules.configured]]). Kill switch:
   * `spark.graft.autoskip.enabled=false`.
   */
 class AutoSkip(spark: SparkSession, store: TableStore)
@@ -432,45 +432,10 @@ class AutoSkip(spark: SparkSession, store: TableStore)
   }
 }
 
-object AutoSkip {
+object AutoSkip extends StoreRules[AutoSkip](new AutoSkip(_, _)) {
   /** The condition a relation was last probed under — suppresses
     * redundant manifest reads across the optimizer's fixed-point
     * iterations (a changed condition re-probes). */
   private[plans] val ProbedTag =
     new TreeNodeTag[String]("graftAutoSkipProbed")
-
-  /** Install transparent skipping for `store` on the session's
-    * experimental optimizer extensions. Returns the rule so callers
-    * (specs, embedded apps) can [[uninstall]] it. */
-  def install(spark: SparkSession, store: TableStore): AutoSkip = {
-    val rule = new AutoSkip(spark, store)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
-  }
-
-  def uninstall(spark: SparkSession, rule: AutoSkip): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-}
-
-/** The `spark.graft.store.root`-driven deployment of [[AutoSkip]]
-  * (one conf key, cluster-wide — the [[ConfiguredMvRewrite]]
-  * pattern). */
-class ConfiguredAutoSkip(spark: SparkSession) extends Rule[LogicalPlan] {
-  @volatile private var cached: Option[(String, AutoSkip)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    spark.conf.get("spark.graft.store.root", "") match {
-      case "" => plan
-      case root =>
-        val rule = cached match {
-          case Some((r, ru)) if r == root => ru
-          case _ =>
-            val ru = new AutoSkip(spark, new TableStore(spark, root))
-            cached = Some((root, ru))
-            ru
-        }
-        rule(plan)
-    }
 }

@@ -106,38 +106,4 @@ class DistinctElim(spark: SparkSession, store: TableStore)
   }
 }
 
-/** The extension-injected flavor (mirrors [[ConfiguredFkJoinElim]]):
-  * resolves the warehouse from `spark.graft.store.root` at apply time;
-  * unset conf = strict no-op. */
-class ConfiguredDistinctElim(spark: SparkSession) extends Rule[LogicalPlan] {
-  @volatile private var cached: Option[(String, DistinctElim)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    spark.conf.get("spark.graft.store.root", "") match {
-      case "" => plan
-      case root =>
-        val rule = cached match {
-          case Some((r, ru)) if r == root => ru
-          case _ =>
-            val ru = new DistinctElim(spark, new TableStore(spark, root))
-            cached = Some((root, ru))
-            ru
-        }
-        rule(plan)
-    }
-}
-
-object DistinctElim {
-  /** Install on the session's experimental optimizer extensions;
-    * returns the rule for [[uninstall]]. */
-  def install(spark: SparkSession, store: TableStore): DistinctElim = {
-    val rule = new DistinctElim(spark, store)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
-  }
-
-  def uninstall(spark: SparkSession, rule: DistinctElim): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-}
+object DistinctElim extends StoreRules[DistinctElim](new DistinctElim(_, _))

@@ -211,38 +211,4 @@ class FkJoinElim(spark: SparkSession, store: TableStore)
   }
 }
 
-/** The extension-injected flavor (mirrors [[ConfiguredMvRewrite]]):
-  * resolves the warehouse from `spark.graft.store.root` at apply time;
-  * unset conf = strict no-op. */
-class ConfiguredFkJoinElim(spark: SparkSession) extends Rule[LogicalPlan] {
-  @volatile private var cached: Option[(String, FkJoinElim)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    spark.conf.get("spark.graft.store.root", "") match {
-      case "" => plan
-      case root =>
-        val rule = cached match {
-          case Some((r, ru)) if r == root => ru
-          case _ =>
-            val ru = new FkJoinElim(spark, new TableStore(spark, root))
-            cached = Some((root, ru))
-            ru
-        }
-        rule(plan)
-    }
-}
-
-object FkJoinElim {
-  /** Install on the session's experimental optimizer extensions;
-    * returns the rule for [[uninstall]]. */
-  def install(spark: SparkSession, store: TableStore): FkJoinElim = {
-    val rule = new FkJoinElim(spark, store)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
-  }
-
-  def uninstall(spark: SparkSession, rule: FkJoinElim): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-}
+object FkJoinElim extends StoreRules[FkJoinElim](new FkJoinElim(_, _))

@@ -48,8 +48,7 @@ class JvRewrite(spark: SparkSession, store: TableStore)
     extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get("spark.graft.jv.rewrite.enabled", "true").toBoolean) plan
-    else try plan.transformUp {
+    try plan.transformUp {
       case j @ Join(l, r, Inner, Some(cond), _) =>
         tryRewrite(j, l, r, cond).getOrElse(j)
     } catch {
@@ -136,38 +135,4 @@ class JvRewrite(spark: SparkSession, store: TableStore)
   }
 }
 
-/** The extension-injected flavor (mirrors [[ConfiguredMvRewrite]]):
-  * resolves the warehouse from `spark.graft.store.root` at apply time;
-  * unset conf = strict no-op. */
-class ConfiguredJvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-  @volatile private var cached: Option[(String, JvRewrite)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    spark.conf.get("spark.graft.store.root", "") match {
-      case "" => plan
-      case root =>
-        val rule = cached match {
-          case Some((r, ru)) if r == root => ru
-          case _ =>
-            val ru = new JvRewrite(spark, new TableStore(spark, root))
-            cached = Some((root, ru))
-            ru
-        }
-        rule(plan)
-    }
-}
-
-object JvRewrite {
-  /** Install on the session's experimental optimizer extensions;
-    * returns the rule for [[uninstall]]. */
-  def install(spark: SparkSession, store: TableStore): JvRewrite = {
-    val rule = new JvRewrite(spark, store)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
-  }
-
-  def uninstall(spark: SparkSession, rule: JvRewrite): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-}
+object JvRewrite extends StoreRules[JvRewrite](new JvRewrite(_, _))

@@ -153,41 +153,4 @@ class MvRewrite(spark: SparkSession, store: TableStore)
   }
 }
 
-/** The extension-injected flavor ([[graft.GraftExtensions]] routes it
-  * through `injectOptimizerRule`): the store root comes from
-  * `spark.graft.store.root` at APPLY time, so a cluster deployment
-  * sets one conf key and every session built from the config rewrites
-  * against that warehouse — no driver code. Unset conf = no-op. */
-class ConfiguredMvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-  @volatile private var cached: Option[(String, MvRewrite)] = None
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    spark.conf.get("spark.graft.store.root", "") match {
-      case "" => plan
-      case root =>
-        val rule = cached match {
-          case Some((r, ru)) if r == root => ru
-          case _ =>
-            val ru = new MvRewrite(spark, new TableStore(spark, root))
-            cached = Some((root, ru))
-            ru
-        }
-        rule(plan)
-    }
-}
-
-object MvRewrite {
-  /** Install the rewrite for `store` on the session's experimental
-    * optimizer extensions. Returns the rule so callers (specs, gates)
-    * can [[uninstall]] it. */
-  def install(spark: SparkSession, store: TableStore): MvRewrite = {
-    val rule = new MvRewrite(spark, store)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
-    rule
-  }
-
-  def uninstall(spark: SparkSession, rule: MvRewrite): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq rule)
-}
+object MvRewrite extends StoreRules[MvRewrite](new MvRewrite(_, _))

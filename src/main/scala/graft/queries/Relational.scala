@@ -1076,12 +1076,7 @@ object Relational extends QueryPack {
   private def j15(s: SparkSession, d: String): DataFrame = {
     Seq("j15_orders", "j15_customer").foreach { tbl =>
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val dir = java.nio.file.Paths.get("spark-warehouse", tbl)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
+      graft.Tables.rmTree(s"spark-warehouse/$tbl")
     }
     t(s, d, "orders").select("o_orderkey", "o_custkey", "o_orderstatus")
       .write.bucketBy(8, "o_custkey").sortBy("o_custkey")

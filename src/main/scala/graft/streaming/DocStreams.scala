@@ -323,9 +323,9 @@ object DocStreams {
             // 4M default) regardless of content. coalesce(1) keeps
             // that to ONE buffer per batch instead of one per shuffle
             // partition (profiled at ~5s/run across 4 micro-batches
-            // otherwise — tools/ProfileSt5b); the delta input is ≤ one
-            // micro-batch of 8-byte fps, so single-task is the right
-            // size by construction. An all-dup batch is skipped —
+            // otherwise — the st5b ledger in SURVEY.md); the delta
+            // input is ≤ one micro-batch of 8-byte fps, so single-task
+            // is the right size by construction. An all-dup batch is skipped —
             // bloomFilter over zero rows yields a null buffer.
             if (bloom != null && !novelM.isEmpty) {
               val delta = novelM.select("fp").coalesce(1)

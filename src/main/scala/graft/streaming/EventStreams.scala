@@ -88,15 +88,11 @@ object EventStreams {
     * [4, defaultParallelism]. Measured on st19 at sf0.1/local[32]:
     * 32 → 4 partitions halves the drain (5.9 s → 2.9 s), rows
     * identical; at 100× the clamp returns the full parallelism, so the
-    * fan GROWS with data, not with the local core count. Deployments
-    * with different per-batch volumes override via
-    * `spark.graft.streaming.statePartitions`. */
+    * fan GROWS with data, not with the local core count. */
   def stateFan(spark: SparkSession, corpusRows: Long): Int =
-    spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .map(_.toInt)
-      .getOrElse(math.max(4, math.min(
-        spark.sparkContext.defaultParallelism,
-        math.ceil(corpusRows / 25000.0).toInt)))
+    math.max(4, math.min(
+      spark.sparkContext.defaultParallelism,
+      math.ceil(corpusRows / 25000.0).toInt))
 
   /** Run `f` (a streaming drain: build + start + awaitTermination)
     * under `spark.sql.shuffle.partitions = n`, restoring after — the

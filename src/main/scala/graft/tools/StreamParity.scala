@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,18 +12,16 @@ import org.apache.spark.sql.streaming.Trigger
   * engages. Exits non-zero on any mismatch.
   *
   * Usage: runMain graft.tools.StreamParity <dir> [st19|st15|st18 ...]
+  *
+  * The memory sink collects every micro-batch to the driver; at 100×
+  * that can pass Spark's default driver result cap, so lift it from the
+  * command line: `SPARK_GRAFT_EXTRA_OPTS=-Dspark.driver.maxResultSize=4g`.
   */
 object StreamParity {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/synth100")
     val which = if (args.length > 1) args.drop(1).toSet else Set("st19", "st15", "st18")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
+    val spark = graft.Sessions.getOrCreate(graft.Sessions.cpus())
     spark.sparkContext.setLogLevel("WARN")
     var failed = false
 

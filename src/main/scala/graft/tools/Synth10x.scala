@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an N× warehouse from a driver sf dir by key-shifted
@@ -21,13 +21,7 @@ object Synth10x {
     val src = args(0)
     val dst = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("synth10x").getOrCreate()
+    val spark = graft.Sessions.getOrCreate(graft.Sessions.cpus())
     spark.sparkContext.setLogLevel("WARN")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -2,13 +2,12 @@ package graft
 
 import graft.heroql.{Analyzer, Ast, HeroQL, Parser, Planner}
 import graft.queries.HeroQueries
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden parser tests over the reference's own samples
   * (`Kernel/README.md:107-205` transcribed in FIXTURES.md) plus the
   * mode-analysis negative cases the reference calls out
   * (`Kernel/README.md:136-137` "cannot run backward"). */
-class HeroQLParserSpec extends AnyFunSuite {
+class HeroQLParserSpec extends SparkSpec {
   import Ast._
 
   test("golden: Top10 sample parses to the expected AST") {
@@ -353,8 +352,6 @@ class HeroQLParserSpec extends AnyFunSuite {
   }
 
   private def chainEdges = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     // 1→2→3→4→5 plus a side edge 2→10
     Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 10L)).toDF("a", "b")
@@ -394,8 +391,6 @@ class HeroQLParserSpec extends AnyFunSuite {
   }
 
   test("ground negation/existence: all-constant atoms are constant emptiness tests") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val t = Seq(1L, 2L, 3L).toDF("x")
     val flag = Seq(7L).toDF("f")
@@ -548,8 +543,6 @@ class HeroQLParserSpec extends AnyFunSuite {
         |:- Z(z), x <- z
         |;  N(y), x <- y + 1
         |.""".stripMargin
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val was = Planner.fixpointMaxIter
     Planner.fixpointMaxIter = 3

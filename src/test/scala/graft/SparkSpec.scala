@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite via lazy val. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.getOrCreate(4)
 
   val sf: String = "/root/testdata/sf0.001"
 }

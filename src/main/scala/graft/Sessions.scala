@@ -32,4 +32,17 @@ object Sessions {
     (conf(cpus) ++ master.map("spark.master" -> _)).foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }
+
+  /** Run `f` with `settings` set on `spark`'s session conf, then put
+    * every key back as it was: a key that was set gets its old value,
+    * a key that was unset is unset again (writing its default instead
+    * would add it to `spark.conf.getAll`, which keys plan caches). */
+  def withConf[A](spark: SparkSession, settings: Map[String, String])(f: => A): A = {
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally settings.keys.foreach { k =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }

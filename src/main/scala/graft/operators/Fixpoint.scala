@@ -29,34 +29,24 @@ object Fixpoint {
     * from the actual parallelism (a pinned constant tuned on local[32]
     * would underpartition a 1000-core cluster) but floored low — the
     * per-round frames are small, and scheduling a full partition fan
-    * of empty tasks per shuffle is pure overhead. Settings restored on
-    * every exit path. */
+    * of empty tasks per shuffle is pure overhead. Set and restored
+    * through [[graft.Sessions.withConf]], on every exit path. */
   def withIterativeConf[A](spark: org.apache.spark.sql.SparkSession,
-      shufflePartitions: Option[Int] = None)(f: => A): A = {
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions", "32")
-    val codegenWas = conf.get("spark.sql.codegen.wholeStage", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    // every fixpoint round's plan is UNIQUE (fresh checkpoint RDD ids,
-    // a growing delta union), so whole-stage codegen recompiles every
-    // stage every round — Janino time, not data time. Interpreted
-    // execution of the small per-round frames is strictly cheaper
-    // (measured: hq21 per-step job 0.45s → see SURVEY §12 round-12).
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    // default fan suits SMALL per-round state (recursive-rule deltas);
-    // a loop whose rounds shuffle the whole input (CC over an edge
-    // corpus) passes the full parallelism instead — 8 tasks sorting
-    // 2M-row partitions on 32 idle cores was a measured 2× loss
-    conf.set("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(
-      math.max(8, spark.sparkContext.defaultParallelism / 4)).toString)
-    try f
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
-      conf.set("spark.sql.codegen.wholeStage", codegenWas)
-    }
-  }
+      shufflePartitions: Option[Int] = None)(f: => A): A =
+    graft.Sessions.withConf(spark, Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      // every fixpoint round's plan is UNIQUE (fresh checkpoint RDD ids,
+      // a growing delta union), so whole-stage codegen recompiles every
+      // stage every round — Janino time, not data time. Interpreted
+      // execution of the small per-round frames is strictly cheaper
+      // (measured: hq21 per-step job 0.45s → see SURVEY §12 round-12).
+      "spark.sql.codegen.wholeStage" -> "false",
+      // default fan suits SMALL per-round state (recursive-rule deltas);
+      // a loop whose rounds shuffle the whole input (CC over an edge
+      // corpus) passes the full parallelism instead — 8 tasks sorting
+      // 2M-row partitions on 32 idle cores was a measured 2× loss
+      "spark.sql.shuffle.partitions" -> shufflePartitions.getOrElse(
+        math.max(8, spark.sparkContext.defaultParallelism / 4)).toString))(f)
 
   /** Transitive closure by path doubling: each round composes the
     * relation with itself (paths of length ≤ 2^k after k rounds), so a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.streaming.EventStreams
+import graft.streaming.EventStreams.Sink.{Memory, Parquet}
 
 /** Batch entry points for the streaming transforms (SURVEY §2.9 added
   * scope). The identical transform functions run under `readStream` in
@@ -229,52 +230,13 @@ object Streaming extends QueryPack {
     * events both arrive as streams, watermarked on both sides with the
     * join time-bounded on BOTH ends, so the state store evicts rows as
     * the watermark advances — bounded state at any stream length. The
-    * memory-sink result is aggregated per signup and checked against
+    * drained result is aggregated per signup and checked against
     * the batch interval join (same truth as j10, reached through the
     * streaming engine — inner stream-stream joins are append-only, so
     * once the source drains the result equals the batch join). */
-  /** Drain an append-mode stream through a PARQUET file sink and read
-    * the result back. The stream-stream joins emit output LINEAR in
-    * the data — a memory sink materializes that on the DRIVER, which
-    * at the 100× probe scale only completes with
-    * `spark.driver.maxResultSize` lifted (r16 sweep); the file sink
-    * keeps it on executor/disk bytes, where a real pipeline's sink
-    * puts it, so scale probes run uncapped. Read-back pins the
-    * stream's own schema (also covers a legitimately empty drain). */
-  private def drainToParquet(s: SparkSession,
-      df: DataFrame, tag: String, stateFan: Option[Int] = None): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory(s"graft-$tag-out-").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(s"graft-$tag-ckpt-").toString
-    def drain(): Unit = {
-      val q = df.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // corpus-sized state fan (EventStreams.stateFan): the stateful
-    // operators' per-batch state-store task count is fixed from
-    // spark.sql.shuffle.partitions at first-batch planning — size it
-    // to the data, not the core count
-    stateFan match {
-      case Some(n) => EventStreams.withShufflePartitions(s, n)(drain())
-      case None => drain()
-    }
-    s.read.schema(df.schema).parquet(out)
-  }
-
-  /** The events corpus's state fan — one parquet metadata count. */
-  private def eventsFan(s: SparkSession, d: String): Int =
-    EventStreams.stateFan(s, graft.Tables.scan(s, s"$d/events.parquet").count())
-
   private def st8(s: SparkSession, d: String): DataFrame = {
-    drainToParquet(s, EventStreams.streamStreamSignupJoin(s, d), "st8",
-        Some(eventsFan(s, d)))
+    EventStreams.drain(EventStreams.streamStreamSignupJoin(s, d), Parquet,
+        Some(EventStreams.eventsFan(s, d)))
       .groupBy("signup_id")
       .agg(count(lit(1)).as("n_events"),
         min("ts").cast(org.apache.spark.sql.types.TimestampNTZType).as("first_ts"),
@@ -291,19 +253,8 @@ object Streaming extends QueryPack {
     * state bug (lost batch, double-applied batch, key mixup) shifts
     * counts or sums and hash-mismatches. */
   private def st9(s: SparkSession, d: String): DataFrame = {
-    val name = "st9_state_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    EventStreams.withShufflePartitions(s, eventsFan(s, d)) {
-      val q = EventStreams.runningUserTotals(s, d)
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    EventStreams.drain(EventStreams.runningUserTotals(s, d), Memory,
+        Some(EventStreams.eventsFan(s, d)), outputMode = "update")
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("sum_value"))).as("m"))
       .select(col("user_id"), col("m.n_events").as("n_events"),
@@ -318,17 +269,7 @@ object Streaming extends QueryPack {
     * sum (accumulation-order-free) and is oracle-checked against the
     * plain batch join. */
   private def st12(s: SparkSession, d: String): DataFrame = {
-    val name = "st12_ssjoin_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = EventStreams.streamStaticSegmentJoin(s, d)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    EventStreams.drain(EventStreams.streamStaticSegmentJoin(s, d), Memory)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_events"),
         expr("CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS DOUBLE)" +
@@ -345,19 +286,8 @@ object Streaming extends QueryPack {
     * key mixup, premature eviction) doubles counts and
     * hash-mismatches. */
   private def st13(s: SparkSession, d: String): DataFrame = {
-    val name = "st13_dedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    EventStreams.withShufflePartitions(s, eventsFan(s, d)) {
-      val q = EventStreams.watermarkDedup(s, d)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    EventStreams.drain(EventStreams.watermarkDedup(s, d), Memory,
+        Some(EventStreams.eventsFan(s, d)))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -447,8 +377,8 @@ object Streaming extends QueryPack {
     * shape. Aggregated per signup (count ignores the null p_id, sum
     * coalesces to 0) and checked against the batch left join. */
   private def st15(s: SparkSession, d: String): DataFrame = {
-    drainToParquet(s, EventStreams.streamStreamSignupLeftJoin(s, d), "st15",
-        Some(eventsFan(s, d)))
+    EventStreams.drain(EventStreams.streamStreamSignupLeftJoin(s, d), Parquet,
+        Some(EventStreams.eventsFan(s, d)))
       .groupBy("signup_id")
       .agg(count(col("p_id")).as("n_purchases"),
         coalesce(sum(expr("CAST(floor(value * 1000000) AS BIGINT)")), lit(0L))
@@ -465,22 +395,11 @@ object Streaming extends QueryPack {
     * count, estimate micros) match the batch oracle exactly because
     * KMV is deterministic order statistics over the shared md5 hash. */
   private def st19(s: SparkSession, d: String): DataFrame = {
-    val name = "st19_kmv_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // corpus-sized state fan — see EventStreams.stateFan (r20: the
     // inherited 32-way fan cost each micro-batch 28 empty-partition
     // state commits; 5.9 s → 2.9 s at sf0.1, rows identical)
-    EventStreams.withShufflePartitions(s, eventsFan(s, d)) {
-      val q = EventStreams.streamWindowedKmvDistinct(s, d)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    EventStreams.drain(EventStreams.streamWindowedKmvDistinct(s, d), Memory,
+      Some(EventStreams.eventsFan(s, d)))
   }
 
   /** st20 — TUPLE sketch in STREAMING AGGREGATION STATE (st19's
@@ -490,19 +409,8 @@ object Streaming extends QueryPack {
     * on watermark close with the deterministic a20 estimate algebra,
     * so the batch oracle is hash-strict. */
   private def st20(s: SparkSession, d: String): DataFrame = {
-    val name = "st20_tuple_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    EventStreams.withShufflePartitions(s, eventsFan(s, d)) {
-      val q = EventStreams.streamWindowedTupleSum(s, d)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    EventStreams.drain(EventStreams.streamWindowedTupleSum(s, d), Memory,
+      Some(EventStreams.eventsFan(s, d)))
   }
 
   /** st18 — stream-stream FULL OUTER join drained through a real
@@ -513,8 +421,8 @@ object Streaming extends QueryPack {
     * clock). Row-level output (matched pairs + both unmatched sides),
     * checked against the batch FULL join over the closable-signup set. */
   private def st18(s: SparkSession, d: String): DataFrame = {
-    drainToParquet(s, EventStreams.streamStreamSignupFullJoin(s, d), "st18",
-        Some(eventsFan(s, d)))
+    EventStreams.drain(EventStreams.streamStreamSignupFullJoin(s, d), Parquet,
+        Some(EventStreams.eventsFan(s, d)))
       .select(col("signup_id"), col("p_id"),
         expr("CAST(floor(coalesce(value, 0) * 1000000) AS BIGINT)")
           .as("vmicro"))

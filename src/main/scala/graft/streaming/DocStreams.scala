@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,43 +44,13 @@ object DocStreams {
     org.apache.spark.sql.functions.call_function(fn, value)
   }
 
-  /** Stage `documents.parquet` as `nFiles` doc_id-range chunks with
-    * ascending names AND mtimes: the file source (latestFirst=false)
-    * processes oldest-first, so arrival order is doc_id order — which
-    * makes "first arrival wins" equal "min doc_id wins", the property
-    * the deterministic oracle needs. */
-  private def stageOrderedDocs(spark: SparkSession, dir: String, nFiles: Int,
-      idCol: String = "doc_id", sourceTable: String = "documents"): String = {
-    val stage = Files.createTempDirectory("graft-docstream-")
-    val docs = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
-    // cast before the collect: an int32-regenerated id column must not
-    // ClassCastException the staging (schema-drift hardening)
-    val maxId = docs.agg(max(col(idCol).cast("long"))).head.getLong(0)
-    val step = maxId / nFiles + 1
-    (0 until nFiles).foreach { k =>
-      val part = docs.filter(col(idCol) >= k * step && col(idCol) < (k + 1) * step)
-      val tmp = Files.createTempDirectory("graft-docstream-part-")
-      part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      // Files.list holds a directory fd until the stream is closed —
-      // drain under try/finally (same contract as TableStore.listDir)
-      val parquetFile = {
-        val written = Files.list(tmp)
-        try {
-          var found: java.nio.file.Path = null
-          val it = written.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet")) found = p
-          }
-          found
-        } finally written.close()
-      }
-      val dest = stage.resolve(f"chunk-$k%04d.parquet")
-      Files.move(parquetFile, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(1_000_000_000L + k * 60_000L))
-    }
-    stage.toString
-  }
+  /** `sourceTable` as four `idCol`-range chunks, one per micro-batch
+    * in id order ([[EventStreams.chunkStream]]) — which makes "first
+    * arrival wins" equal "min doc_id wins", the property the
+    * deterministic oracle needs. */
+  private def orderedDocs(spark: SparkSession, dir: String,
+      idCol: String = "doc_id", sourceTable: String = "documents"): DataFrame =
+    EventStreams.chunkStream(graft.Tables.scan(spark, s"$dir/$sourceTable.parquet"), idCol)
 
   /** Streaming incremental dedup into the table store: each micro-batch
     * keeps one row per text (min doc_id within the batch), drops texts
@@ -101,14 +68,9 @@ object DocStreams {
     * null-keyed dedup. Same guard on [[dedupSinkToStoreByFp]]. */
   def dedupSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/documents.parquet")
-    val staged = stageOrderedDocs(spark, dir, nFiles = 4)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    val q = src.select("doc_id", "text", "lang", "n_chars")
-      .filter(col("text").isNotNull)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val src = orderedDocs(spark, dir)
+    EventStreams.drain(src.select("doc_id", "text", "lang", "n_chars")
+      .filter(col("text").isNotNull), EventStreams.Sink.ForeachBatch { (batch, _) =>
         val firstPerText = batch.groupBy("text").agg(
           min("doc_id").as("doc_id"),
           expr("min_by(lang, doc_id)").as("lang"),
@@ -138,12 +100,7 @@ object DocStreams {
           if (store.exists(table)) store.insert(table, novel)
           else store.create(table, novel)
         } finally first.unpersist(false)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-dedup-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+      })
     store.read(table)
   }
 
@@ -193,10 +150,7 @@ object DocStreams {
       idCol: String = "doc_id", textCol: String = "text",
       carryCols: Seq[String] = Seq("lang", "n_chars"),
       sourceTable: String = "documents"): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
-    val staged = stageOrderedDocs(spark, dir, nFiles = 4, idCol, sourceTable)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+    val src = orderedDocs(spark, dir, idCol, sourceTable)
     val bloomEnabled = spark.conf.getOption("spark.graft.dedup.bloomEnabled")
       .forall(_.toBoolean)
     val expectedItems = spark.conf.getOption("spark.graft.dedup.bloomExpectedItems")
@@ -231,10 +185,8 @@ object DocStreams {
     // null-text guard: see dedupSinkToStore's precondition — a null fp
     // would also silently vanish from the long-typed bloom probe's
     // candidate set, making the re-admission loop invisible to the probe
-    val q = src.select(idCol, (textCol +: carryCols): _*)
-      .filter(col(textCol).isNotNull)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    EventStreams.drain(src.select(idCol, (textCol +: carryCols): _*)
+      .filter(col(textCol).isNotNull), EventStreams.Sink.ForeachBatch { (batch, _) =>
         val firstPerFp = batch
           .withColumn("fp", graft.operators.TextFns.fingerprintOf(col(textCol)))
           .groupBy("fp").agg(
@@ -346,12 +298,7 @@ object DocStreams {
           first.unpersist(false)
           if (bloomBc != null) bloomBc.destroy()
         }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-dedup-fp-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+      })
     store.read(table)
   }
 }

@@ -1,7 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Streaming analytics over the `events` table.
@@ -94,16 +99,67 @@ object EventStreams {
       spark.sparkContext.defaultParallelism,
       math.ceil(corpusRows / 25000.0).toInt))
 
-  /** Run `f` (a streaming drain: build + start + awaitTermination)
-    * under `spark.sql.shuffle.partitions = n`, restoring after — the
-    * state-partition count is fixed at the query's first micro-batch
-    * from this conf (then pinned in its checkpoint), so the scope must
-    * cover `.start()`. Same temporary-conf pattern as
-    * [[graft.operators.Fixpoint.withIterativeConf]]. */
-  def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", was)
+  /** The events corpus's state fan — one parquet metadata count. */
+  def eventsFan(spark: SparkSession, dir: String): Int =
+    stateFan(spark, graft.Tables.scan(spark, s"$dir/events.parquet").count())
+
+  /** Where [[drain]] writes a stream, and what it returns. */
+  sealed trait Sink[A]
+  object Sink {
+    /** The memory sink; returns the drained rows. The sink's temp view
+      * is dropped once the frame is resolved, so the rows live only as
+      * long as the returned frame. */
+    case object Memory extends Sink[DataFrame]
+    /** A parquet file sink; returns the files read back under the
+      * stream's own schema (which also covers an empty drain). The
+      * stream-stream joins emit output linear in the data: a memory
+      * sink would gather it on the driver, a file sink keeps it on
+      * disk, where a real pipeline's sink puts it. */
+    case object Parquet extends Sink[DataFrame]
+    /** `foreachBatch(f)`: each micro-batch goes to `f`. */
+    final case class ForeachBatch(f: (DataFrame, Long) => Unit) extends Sink[Unit]
+  }
+
+  /** Drain the streaming frame `df` to the end of its source (an
+    * AvailableNow trigger) into `sink`, under a fresh query name and a
+    * checkpoint directory deleted once the query ends.
+    *
+    * `stateFan` sizes the stateful operators ([[stateFan]]): their
+    * state-partition count is fixed from `spark.sql.shuffle.partitions`
+    * at the query's first micro-batch. The same scope pins no-data
+    * micro-batches on, which the heartbeats of the watermarked gates
+    * rely on to flush their last windows. The scope covers only
+    * `start()`: the query clones the session when it is constructed,
+    * so the stream keeps both settings and the session is restored
+    * before the drain runs. */
+  def drain[A](df: DataFrame, sink: Sink[A], stateFan: Option[Int] = None,
+      outputMode: String = "append"): A = {
+    val spark = df.sparkSession
+    val name = "graft_drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val ckpt = Files.createTempDirectory("graft-drain-ckpt-").toString
+    val writer = df.writeStream.queryName(name).outputMode(outputMode)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", ckpt)
+    lazy val out = Files.createTempDirectory("graft-drain-out-").toString
+    val sinkWriter = sink match {
+      case Sink.Memory => writer.format("memory")
+      case Sink.Parquet => writer.format("parquet").option("path", out)
+      case Sink.ForeachBatch(f) => writer.foreachBatch(f)
+    }
+    val fanConf = stateFan.fold(Map.empty[String, String])(n => Map(
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"))
+    try {
+      val q = graft.Sessions.withConf(spark, fanConf)(sinkWriter.start())
+      try q.awaitTermination() finally q.stop()
+    } finally graft.Tables.rmTree(ckpt)
+    sink match {
+      case Sink.Memory =>
+        val rows = spark.table(name)
+        spark.catalog.dropTempView(name)
+        rows
+      case Sink.Parquet => spark.read.schema(df.schema).parquet(out)
+      case Sink.ForeachBatch(_) => ()
+    }
   }
 
   /** The staged corpus's max-ts row as a LOCAL 1-row frame, plus its
@@ -130,26 +186,14 @@ object EventStreams {
     (maxMicros, base)
   }
 
-  /** Clock-advancing heartbeat ROUNDS for a drained gate (r21): ONE
-    * round suffices when the engine runs no-data micro-batches (the
-    * Spark default) — the heartbeat batch advances the watermark, and
-    * the trailing no-data batch is where the newly-computed watermark
-    * APPLIES, flushing every closed window / unmatched outer row
-    * (StreamParity pins value equality at sf0.1 and the 100× corpus;
-    * the r20 two-round discipline predates accounting for the no-data
-    * batch and cost one state-heavy micro-batch per drain). With
-    * no-data batches DISABLED there is no trailing batch, so the
-    * second, later round is restored — without it the first round's
-    * watermark would never apply and tail state would never flush.
-    * The conf is read through Spark's typed getter, so it parses the
-    * way the engine that runs the drain does (`TRUE` is true). */
-  private def heartbeatRounds(spark: SparkSession): Seq[Long] =
-    if (spark.sessionState.conf.streamingNoDataMicroBatchesEnabled) Seq(30L)
-    else Seq(30L, 31L)
-
   /** Append one future-dated copy of [[maxTsBase]]'s row as its own
     * staged file (one micro-batch under maxFilesPerTrigger=1) — the
-    * clock-advancing heartbeat. `mutate` lets the outer joins stamp a
+    * clock-advancing heartbeat. ONE heartbeat suffices (r21): the
+    * heartbeat batch advances the watermark, and the trailing no-data
+    * batch that [[drain]] pins on for a stateful stream is where the
+    * new watermark APPLIES, flushing every closed window / unmatched
+    * outer row (StreamParity pins value equality at sf0.1 and the 100×
+    * corpus). `mutate` lets the outer joins stamp a
     * side's real event type (the predicate-pushdown lesson in their
     * docstrings). The ts arithmetic is the exact Spark expression the
     * per-site closures used, evaluated on the local 1-row frame. */
@@ -200,12 +244,9 @@ object EventStreams {
   def runningUserTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // id-range chunks, one per trigger: the state genuinely
     // accumulates across micro-batches instead of one giant batch
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
+    val src = chunkStream(graft.Tables.scan(spark, s"$dir/events.parquet"), "event_id")
     src.selectExpr("user_id", "value").as[(Long, Double)]
       .groupByKey(_._1)
       .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -231,31 +272,19 @@ object EventStreams {
       store: graft.store.TableStore, table: String, vars: Seq[String],
       dimPath: String, dimVars: Seq[String], leftKey: String,
       rightKey: String, sourceTable: String = "events"): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
-    require(vars.forall(schema.fieldNames.contains),
+    val rows = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
+    require(vars.forall(rows.schema.fieldNames.contains),
       s"stream enrich variables must name physical columns of $sourceTable")
     val dim = graft.Tables.scan(spark, dimPath)
     require(dimVars.forall(dim.schema.fieldNames.contains),
       s"stream enrich dimension variables must name physical columns of $dimPath")
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, vars.head, sourceTable))
-      .select(vars.map(col): _*)
+    val src = chunkStream(rows, vars.head).select(vars.map(col): _*)
     val bdim = org.apache.spark.sql.functions.broadcast(
       dim.select(dimVars.map(col): _*))
     val joined =
       if (leftKey == rightKey) src.join(bdim, Seq(leftKey))
       else src.join(bdim, col(leftKey) === col(rightKey))
-    val q = joined.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (store.exists(table)) store.insert(table, batch)
-        else store.create(table, batch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-enrich-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+    drain(joined, Sink.ForeachBatch(appendTo(store, table)))
     store.read(table)
   }
 
@@ -286,10 +315,8 @@ object EventStreams {
     * an exact oracle, while still exercising eviction across the
     * four id-chunked micro-batches. */
   def watermarkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
-    val src = tsInstant(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events")))
+    val src = tsInstant(
+      chunkStream(graft.Tables.scan(spark, s"$dir/events.parquet"), "event_id"))
     src.select(explode(expr("array(1, 2)")).as("__copy"),
         col("event_id"), col("ts"), col("event_type"),
         col("user_id"), col("value"))
@@ -326,9 +353,7 @@ object EventStreams {
       java.nio.file.Files.copy(src, stage.resolve("events.parquet"))
       (stage.toString, 1)
     } else {
-      import scala.jdk.CollectionConverters._
-      val parts = java.nio.file.Files.list(src).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      val parts = parquetFiles(src)
       if (parts.size == 1) {
         java.nio.file.Files.copy(parts.head,
           stage.resolve(parts.head.getFileName.toString))
@@ -352,21 +377,80 @@ object EventStreams {
       stage: String): (String, Int) = {
     val fan = spark.sparkContext.defaultParallelism
     df.repartitionByRange(fan, col("ts")).write.mode("append").parquet(stage)
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-    val staged = try s.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString) finally s.close()
-    // strictly increasing, firmly in the past: the heartbeats appended
-    // later must list after EVERY corpus file
-    var t = System.currentTimeMillis() - (staged.size + 3600L) * 1000L
-    staged.foreach { p =>
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(t))
-      t += 1000L
-    }
+    val staged = parquetFiles(java.nio.file.Paths.get(stage))
+    pinMtimes(staged)
     (stage, staged.size)
   }
+
+  /** The `.parquet` files directly under `dir`, sorted by name. The
+    * listing stream is closed: `Files.list` holds a directory handle
+    * until it is (the hazard `TableStore.listDir` documents). */
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  /** Give `files`, in order, strictly ascending mtimes one second
+    * apart and firmly in the past: the file source takes the oldest
+    * file first, and a file appended later (a heartbeat) lists after
+    * every one of them — even when the writes shared a clock tick. */
+  private def pinMtimes(files: Seq[Path]): Unit = {
+    val t0 = System.currentTimeMillis() - (files.size + 3600L) * 1000L
+    files.zipWithIndex.foreach { case (p, i) =>
+      Files.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 1000L))
+    }
+  }
+
+  /** Stage `rows` as `n` parquet chunks for a file stream: chunk k
+    * (`chunk-%04d.parquet`, mtimes ascending in chunk order, see
+    * [[pinMtimes]]) holds the rows of the k-th equal range of
+    * `chunkCol` over [0, max] (ids), or with `ntiles` the k-th
+    * `chunkCol`-ordered ntile (event time: chunk k+1 starts at or after
+    * chunk k ends, the arrival contract of a time-ordered stream; the
+    * global ntile sort is STAGING-only code for the local gates — a
+    * real stream arrives already ordered). Returns the stage path. */
+  private[graft] def stageChunks(rows: DataFrame, chunkCol: String, n: Int,
+      ntiles: Boolean = false): String = {
+    val chunk =
+      if (ntiles) ntile(n).over(Window.orderBy(col(chunkCol))) - 1
+      else {
+        // cast before the collect: an int32-regenerated id column must
+        // not ClassCastException the staging (schema-drift hardening)
+        val maxId = rows.agg(max(col(chunkCol).cast("long"))).head.getLong(0)
+        (col(chunkCol).cast("long") / (maxId / n + 1)).cast("int")
+      }
+    val tagged = rows.withColumn("__chunk", chunk)
+    val stage = Files.createTempDirectory("graft-chunks-")
+    val chunks = (0 until n).map { k =>
+      // written under a hidden name, then moved to its chunk name
+      val tmp = stage.resolve(s"_chunk-$k")
+      tagged.filter(col("__chunk") === k).drop("__chunk")
+        .coalesce(1).write.parquet(tmp.toString)
+      val file = stage.resolve(f"chunk-$k%04d.parquet")
+      Files.move(parquetFiles(tmp).head, file)
+      graft.Tables.rmTree(tmp.toString)
+      file
+    }
+    pinMtimes(chunks)
+    stage.toString
+  }
+
+  /** [[stageChunks]] read back as a file stream that delivers one
+    * chunk per micro-batch, in chunk order. */
+  private[graft] def chunkStream(rows: DataFrame, chunkCol: String, n: Int = 4,
+      ntiles: Boolean = false): DataFrame =
+    rows.sparkSession.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stageChunks(rows, chunkCol, n, ntiles))
+
+  /** The `foreachBatch` body of the append sinks: each batch lands in
+    * `table` through one atomic store commit. */
+  private def appendTo(store: graft.store.TableStore, table: String)(
+      batch: DataFrame, batchId: Long): Unit =
+    if (store.exists(table)) store.insert(table, batch)
+    else store.create(table, batch)
 
   /** Gap-based sessionization with per-user session ordinals (the ev1
     * islands analysis; the form `session_window` cannot express —
@@ -449,8 +533,8 @@ object EventStreams {
       store: graft.store.TableStore, table: String, gapSeconds: Long,
       vars: Seq[String], sourceTable: String = "events"): DataFrame = {
     val Seq(userV, tsV, valueV, idV) = vars
-    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
-    require(Seq(userV, tsV, valueV, idV).forall(schema.fieldNames.contains),
+    val rows = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
+    require(Seq(userV, tsV, valueV, idV).forall(rows.schema.fieldNames.contains),
       s"stream sessionize variables must name physical columns of $sourceTable")
     val gapNanos = gapSeconds * 1000000000L
     // a NEW streaming query numbers batches from 0 again — reset the
@@ -462,22 +546,13 @@ object EventStreams {
     // event-TIME-ordered chunked staging: batch k+1's events all start
     // at or after batch k's — the contract a real time-ordered stream
     // provides, and what makes open-session merging correct
-    val staged = stageEventChunks(spark, dir, nFiles = 4, tsV, sourceTable,
-      orderByTs = true)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    val q = src.select(col(userV), col(tsV), col(valueV), col(idV))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val src = chunkStream(rows, tsV, ntiles = true)
+    drain(src.select(col(userV), col(tsV), col(valueV), col(idV)),
+      Sink.ForeachBatch { (batch, batchId) =>
         val bs = sessionizeExact(batch.withColumnRenamed(tsV, "ts"),
           gapNanos, userCol = userV, valueCol = valueV, idCol = idV)
         mergeSessionBatch(store, table, gapNanos, bs, batchId)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-sess-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+      })
     val closedT = table + "__closed"
     val stateT = table + "__state"
     // an empty source delivers no batch — publish an empty session
@@ -571,49 +646,6 @@ object EventStreams {
     }
   }
 
-  /** Split the source table into `nFiles` parquet chunks in a staging
-    * dir (the file stream source delivers one per trigger) — by id
-    * range, or by event-time quantile (`orderByTs`: chunk k+1 starts at
-    * or after chunk k ends, the arrival contract of a time-ordered
-    * stream; the global ntile is STAGING-only code for the local gate —
-    * a real stream arrives already ordered). */
-  private def stageEventChunks(spark: SparkSession, dir: String,
-      nFiles: Int, chunkCol: String, sourceTable: String,
-      orderByTs: Boolean = false): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-evstream-")
-    val rows0 = graft.Tables.scan(spark, s"$dir/$sourceTable.parquet")
-    val rows =
-      if (orderByTs) {
-        import org.apache.spark.sql.expressions.Window
-        rows0.withColumn("__chunk",
-          ntile(nFiles).over(Window.orderBy(col(chunkCol))) - 1)
-      } else {
-        // cast before the collect: an int32-regenerated id column must
-        // not ClassCastException the staging (schema-drift hardening)
-        val maxId = rows0.agg(max(col(chunkCol).cast("long"))).head.getLong(0)
-        val step = maxId / nFiles + 1
-        rows0.withColumn("__chunk", (col(chunkCol).cast("long") / step).cast("int"))
-      }
-    (0 until nFiles).foreach { k =>
-      val part = rows.filter(col("__chunk") === k).drop("__chunk")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-evstream-part-")
-      part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val written = java.nio.file.Files.list(tmp)
-      val parquetFile =
-        try {
-          var found: java.nio.file.Path = null
-          val it = written.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet")) found = p
-          }
-          found
-        } finally written.close()
-      java.nio.file.Files.move(parquetFile, stage.resolve(f"chunk-$k%04d.parquet"))
-    }
-    stage.toString
-  }
-
   /** Streaming materialized-view maintenance: readStream over the
     * staged events, `foreachBatch` folding each micro-batch into a
     * store-held grouped aggregate through
@@ -628,23 +660,14 @@ object EventStreams {
       store: graft.store.TableStore, table: String,
       spec: graft.store.MaterializedView.MvSpec,
       sourceTable: String = "events", chunkCol: String = "event_id"): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/$sourceTable.parquet")
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, chunkCol, sourceTable))
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // every batch — including the first — goes through the MARKED
-        // refresh (it folds into an empty MV when the table is new), so
-        // replays of any batch id are skipped whole
-        graft.store.MaterializedView.refreshInsert(store, table, batch,
-          spec, Some(batchId))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-mv-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+    val src = chunkStream(graft.Tables.scan(spark, s"$dir/$sourceTable.parquet"), chunkCol)
+    drain(src, Sink.ForeachBatch { (batch, batchId) =>
+      // every batch — including the first — goes through the MARKED
+      // refresh (it folds into an empty MV when the table is new), so
+      // replays of any batch id are skipped whole
+      graft.store.MaterializedView.refreshInsert(store, table, batch,
+        spec, Some(batchId))
+    })
     store.read(table)
   }
 
@@ -720,46 +743,22 @@ object EventStreams {
     // heartbeat files then flush closed windows in their own
     // micro-batches, which is the contract the heartbeat comments
     // below describe).
-    var corpusFiles = 1
-    val staged = {
-      val stage = java.nio.file.Files.createTempDirectory("graft-stream-")
-        .toString
-      val src = spark.read.schema(schema).parquet(s"$dir/events.parquet")
+    val events = spark.read.schema(schema).parquet(s"$dir/events.parquet")
+    val (staged, corpusFiles) =
       if (timeSlices <= 1)
         // r21 (verdict item 5): the one-batch rewrite was a
         // `repartition(1)` single-task funnel — now a parallel
         // range-partitioned write whose whole file set still lands in
         // batch 1 via maxFilesPerTrigger = corpusFiles below
-        corpusFiles = stageCorpusParallel(spark, src, stage)._2
-      else {
-        // EVENT-TIME-ORDERED chunks (the spec's multi-batch path):
-        // slice k holds the k-th ts-ntile, written oldest-first with
-        // PINNED ascending mtimes (append writes land within the same
-        // clock tick, and the file source orders batches by mtime), so
-        // replay arrives in rough event-time order — a later slice is
-        // always above the watermark the previous one advanced, which
-        // is the cross-batch watermark behavior this variant exists to
-        // exercise. The ntile global sort is fine HERE because this
-        // path is spec-only; production stays one-batch (see above).
-        val sliced = src.withColumn("__slice",
-          org.apache.spark.sql.expressions.Window.orderBy(col("ts")) match {
-            case w => ntile(timeSlices).over(w)
-          })
-        val stageF = new java.io.File(stage)
-        var seen = Set.empty[String]
-        (1 to timeSlices).foreach { k =>
-          sliced.filter(col("__slice") === k).drop("__slice")
-            .repartition(1).write.mode("append").parquet(stage)
-          stageF.listFiles().filter(f => f.getName.startsWith("part-"))
-            .filterNot(f => seen(f.getName))
-            .foreach { f =>
-              f.setLastModified(1600000000000L + k * 60000L)
-              seen += f.getName
-            }
-        }
-      }
-      stage
-    }
+        stageCorpusParallel(spark, events,
+          Files.createTempDirectory("graft-stream-").toString)
+      else
+        // EVENT-TIME-ORDERED chunks (the spec's multi-batch path): slice
+        // k holds the k-th ts-ntile, one micro-batch each, so a later
+        // slice is always above the watermark the previous one advanced
+        // — the cross-batch watermark behavior this variant exists to
+        // exercise. Production stays one-batch (see above).
+        (stageChunks(events, "ts", timeSlices, ntiles = true), 1)
     val (maxMicros, hbBase) = maxTsBase(spark, staged, schema)
     val closableMicros = maxMicros - (7L * 24 + 2) * 3600L * 1000000L
     // A watermark computed at the end of batch N applies in batch N+1 —
@@ -783,30 +782,19 @@ object EventStreams {
     // Each side instead drops its (future-dated) heartbeat with a
     // ts-referencing conjunct, which CANNOT push below the watermark:
     // the row advances the clock first, then dies.
-    // TWO heartbeat rounds, not one: a watermark computed at the end of
-    // batch N only applies in batch N+1, and AvailableNow stops at the
-    // last FILE — without a second (later) heartbeat batch, state whose
-    // eviction needs the FIRST heartbeat's post-corpus watermark (the
-    // full join's last-hour unmatched purchases) would never flush.
-    // One row per SIDE per round: the global watermark is the MIN over
-    // both sides' nodes, so both clocks must advance. r21: both sides'
-    // rows ride ONE file per round — the watermark only updates at the
-    // END of a batch (min over both nodes either way), so two per-side
-    // files in sequence advanced nothing a combined file doesn't; each
-    // per-side file just paid its own state-heavy micro-batch (4 → 2
-    // heartbeat batches, drained rows identical — StreamParity/
+    // One heartbeat batch ([[writeHeartbeat]]) with one row per SIDE:
+    // the global watermark is the MIN over both sides' nodes, so both
+    // clocks must advance. r21: both sides' rows ride ONE file — the
+    // watermark only updates at the END of a batch (min over both nodes
+    // either way), so two per-side files in sequence advanced nothing a
+    // combined file doesn't; each per-side file just paid its own
+    // state-heavy micro-batch (drained rows identical — StreamParity/
     // StreamingSpec pin it at sf0.1 and 100×).
-    def heartbeat(days: Long): Unit =
-      writeHeartbeat(hbBase, staged, days, hb =>
-        hb.withColumn("event_type", lit("signup")).unionByName(
-          hb.withColumn("event_type", lit("purchase"))))
-    heartbeatRounds(spark).foreach(heartbeat)
+    writeHeartbeat(hbBase, staged, 30L, hb =>
+      hb.withColumn("event_type", lit("signup")).unionByName(
+        hb.withColumn("event_type", lit("purchase"))))
     // corpus files (pinned-older mtimes) fill batch 1 exactly; the
-    // heartbeat files appended above still land in LATER batches. With
-    // a >1-file corpus several heartbeats can share one batch — the
-    // watermark is monotone and AvailableNow runs a trailing flush
-    // batch after the last advancement, so the drained rows are
-    // identical (StreamingSpec pins batch parity at both regimes).
+    // heartbeat file appended above still lands in a LATER batch.
     def src() = tsInstant(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", corpusFiles.toString).parquet(staged))
       .withWatermark("ts", "1 hour")
@@ -846,7 +834,7 @@ object EventStreams {
     val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val (staged, corpusFiles) = stageDir(spark, dir)
     val (maxMicros, hbBase) = maxTsBase(spark, staged, schema)
-    heartbeatRounds(spark).foreach(writeHeartbeat(hbBase, staged, _))
+    writeHeartbeat(hbBase, staged, 30L)
     val kmv = udaf(new graft.functions.KmvSketchAgg(k))
     tsInstant(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", corpusFiles.toString).parquet(staged))
@@ -888,7 +876,7 @@ object EventStreams {
     val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     val (staged, corpusFiles) = stageDir(spark, dir)
     val (maxMicros, hbBase) = maxTsBase(spark, staged, schema)
-    heartbeatRounds(spark).foreach(writeHeartbeat(hbBase, staged, _))
+    writeHeartbeat(hbBase, staged, 30L)
     val tup = udaf(new graft.functions.KmvTupleAgg(k, "max"))
     tsInstant(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", corpusFiles.toString).parquet(staged))
@@ -919,23 +907,11 @@ object EventStreams {
     * table. */
   def sinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // id-range chunked staging → one commit per micro-batch: the sink
     // gate exercises REAL multi-batch ingest, not one giant batch
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
-    val q = src.select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (store.exists(table)) store.insert(table, batch)
-        else store.create(table, batch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-sink-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+    val src = chunkStream(graft.Tables.scan(spark, s"$dir/events.parquet"), "event_id")
+    drain(src.select(col("event_id"), col("user_id"), col("event_type"), col("value")),
+      Sink.ForeachBatch(appendTo(store, table)))
     store.read(table)
   }
 
@@ -955,24 +931,14 @@ object EventStreams {
     * tombstone debt bounded across any number of triggers. */
   def retentionSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String, retain: Long): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
-    val q = src.select(col("event_id"), col("user_id"), col("event_type"),
-        expr("CAST(floor(value * 1000000) AS BIGINT)").as("vmicro"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (store.exists(table)) store.insert(table, batch)
-        else store.create(table, batch)
+    val src = chunkStream(graft.Tables.scan(spark, s"$dir/events.parquet"), "event_id")
+    drain(src.select(col("event_id"), col("user_id"), col("event_type"),
+        expr("CAST(floor(value * 1000000) AS BIGINT)").as("vmicro")),
+      Sink.ForeachBatch { (batch, batchId) =>
+        appendTo(store, table)(batch, batchId)
         val hi = store.read(table).agg(max(col("event_id"))).head.getLong(0)
         store.deleteMor(table, col("event_id") < lit(hi - retain))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ret-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+      })
     store.read(table)
   }
 
@@ -988,21 +954,10 @@ object EventStreams {
     * from the bad batch commits). */
   def checkedSinkToStore(spark: SparkSession, dir: String,
       store: graft.store.TableStore, table: String): DataFrame = {
-    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stageEventChunks(spark, dir, nFiles = 4, "event_id", "events"))
-    val q = src.select(col("event_id"), col("user_id"), col("event_type"),
-        expr("CAST(floor(value * 1000000) AS BIGINT)").as("vmicro"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.store.CheckConstraints.insert(store, table, batch)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-cksink-ckpt-").toString)
-      .start()
-    q.awaitTermination()
+    val src = chunkStream(graft.Tables.scan(spark, s"$dir/events.parquet"), "event_id")
+    drain(src.select(col("event_id"), col("user_id"), col("event_type"),
+        expr("CAST(floor(value * 1000000) AS BIGINT)").as("vmicro")),
+      Sink.ForeachBatch((batch, _) => graft.store.CheckConstraints.insert(store, table, batch)))
     store.read(table)
   }
 

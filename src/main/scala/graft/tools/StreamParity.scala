@@ -1,7 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.EventStreams
+import graft.streaming.EventStreams.Sink.{Memory, Parquet}
 
 /** Value-parity probe for the streaming drains at ARBITRARY corpus
   * scale (the r21 parallel-staging validation): drains
@@ -9,13 +11,19 @@ import org.apache.spark.sql.streaming.Trigger
   * row sets against their BATCH twins computed from the same parquet —
   * the check the sf-scale StreamingSpec pins, runnable against the
   * 100× synth corpus where the multi-file staging path actually
-  * engages. Exits non-zero on any mismatch.
+  * engages. Each frame is drained exactly as its gate drains it: the
+  * same [[EventStreams.drain]] sink and the same corpus-sized state
+  * fan. Exits non-zero on any mismatch.
   *
   * Usage: runMain graft.tools.StreamParity <dir> [st19|st15|st18 ...]
   *
-  * The memory sink collects every micro-batch to the driver; at 100×
-  * that can pass Spark's default driver result cap, so lift it from the
-  * command line: `SPARK_GRAFT_EXTRA_OPTS=-Dspark.driver.maxResultSize=4g`.
+  * st15 and st18 drain through the parquet file sink, so their rows
+  * never reach the driver and need no `spark.driver.maxResultSize`.
+  * st19 drains through the memory sink, which gathers its rows (one per
+  * day and event type) on the driver; it is the only one that could
+  * pass Spark's default driver result cap on a corpus with far more
+  * days, and then the cap is lifted from the command line:
+  * `SPARK_GRAFT_EXTRA_OPTS=-Dspark.driver.maxResultSize=4g`.
   */
 object StreamParity {
   def main(args: Array[String]): Unit = {
@@ -25,15 +33,7 @@ object StreamParity {
     spark.sparkContext.setLogLevel("WARN")
     var failed = false
 
-    def drain(name: String, sdf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val q = sdf.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft-parity-$name-").toString)
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
+    val fan = Some(EventStreams.eventsFan(spark, dir))
 
     def compare(name: String, streamed: org.apache.spark.sql.DataFrame,
         batch: org.apache.spark.sql.DataFrame): Unit = {
@@ -48,14 +48,14 @@ object StreamParity {
 
     if (which("st19")) {
       val t0 = System.nanoTime()
-      val streamed = drain("p_st19",
-        graft.streaming.EventStreams.streamWindowedKmvDistinct(spark, dir))
+      val streamed = EventStreams.drain(
+        EventStreams.streamWindowedKmvDistinct(spark, dir), Memory, fan)
       println(f"st19 drain ${(System.nanoTime() - t0) / 1e9}%.1f s")
       // batch twin: identical projections/aggregates over the same rows
       // (KMV order statistics are order-insensitive and deterministic)
       val k = 256
       val kmv = udaf(new graft.functions.KmvSketchAgg(k))
-      val ev = graft.streaming.EventStreams.tsInstant(
+      val ev = EventStreams.tsInstant(
         spark.read.parquet(s"$dir/events.parquet"))
       val batch = ev
         .withColumn("h", expr(
@@ -75,12 +75,11 @@ object StreamParity {
     Seq("st15" -> "leftOuter", "st18" -> "fullOuter").foreach { case (nm, jt) =>
       if (which(nm)) {
         val t0 = System.nanoTime()
-        val streamed = drain(s"p_$nm",
-          if (jt == "leftOuter")
-            graft.streaming.EventStreams.streamStreamSignupLeftJoin(spark, dir)
-          else graft.streaming.EventStreams.streamStreamSignupFullJoin(spark, dir))
+        val streamed = EventStreams.drain(
+          if (jt == "leftOuter") EventStreams.streamStreamSignupLeftJoin(spark, dir)
+          else EventStreams.streamStreamSignupFullJoin(spark, dir), Parquet, fan)
         println(f"$nm drain ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        val ev = graft.streaming.EventStreams.tsInstant(
+        val ev = EventStreams.tsInstant(
           spark.read.parquet(s"$dir/events.parquet"))
         val maxTs = ev.agg(max(expr("unix_micros(ts)"))).head.getLong(0)
         val closable = maxTs - (7L * 24 + 2) * 3600L * 1000000L

@@ -15,14 +15,7 @@ class BucketingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS b_customer")
     // the in-memory catalog forgets tables between sessions but leaves
     // their managed locations on disk — clear them or saveAsTable refuses
-    Seq("b_orders", "b_customer").foreach { t =>
-      val dir = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
-    }
+    Seq("b_orders", "b_customer").foreach(t => Tables.rmTree(s"spark-warehouse/$t"))
     o.write.bucketBy(8, "o_custkey").sortBy("o_custkey")
       .mode("overwrite").saveAsTable("b_orders")
     c.withColumn("k", col("c_custkey")).write.bucketBy(8, "k").sortBy("k")

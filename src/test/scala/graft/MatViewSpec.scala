@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -67,8 +66,8 @@ class MatViewSpec extends SparkSpec {
     MaterializedView.build(st, "mv",
       spark.read.parquet(stage.toString), mvSpec)
     // burn the base — a refresh that rescans it now throws
-    Files.walk(stage).sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.delete(p))
+    Tables.rmTree(stage.toString)
+    assert(!Files.exists(stage))
     val batch = li.filter(col("l_orderkey") % 4 === 3).localCheckpoint()
     MaterializedView.refreshInsert(st, "mv", batch, mvSpec)
     assert(sortedRows(st.read("mv")) ===
@@ -88,8 +87,8 @@ class MatViewSpec extends SparkSpec {
       .write.mode("overwrite").parquet(stage.toString)
     val st = scratch()
     MaterializedView.build(st, "mv", spark.read.parquet(stage.toString), spec)
-    Files.walk(stage).sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.delete(p))
+    Tables.rmTree(stage.toString)
+    assert(!Files.exists(stage))
     (0 until 3).foreach { r =>
       MaterializedView.refreshInsert(st, "mv",
         li.filter(col("l_orderkey") % 4 === 3 &&
